@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * delimited JSON action files `%020d.json`, parquet checkpoints
   * `%020d.checkpoint.parquet`, the `_last_checkpoint` pointer), so
   * tables written here are readable by any Delta reader and vice
-  * versa — the external-interop boundary [[TxTable]] (a Delta-CLASS
-  * protocol with its own manifest format) deliberately left open.
+  * versa. It is the lake's one table format: the streaming artifact
+  * sinks commit through it too.
   *
   * Reference surface: the reference lake
   * (`ingestion-datalake.py:108-125`, the blob PUT) lands plain files in
@@ -94,8 +94,8 @@ import org.apache.spark.sql.types._
   * checkpoint scan through an executor task into the new one without
   * ever landing on the driver.
   *
-  * Commit publish is the same atomic same-FS `createLink` as
-  * [[TxTable.publish]]: two racing writers of version v cannot both
+  * Commit publish is an atomic same-FS `createLink` ([[publish]]): two
+  * racing writers of version v cannot both
   * win, which is exactly the protocol's "mutual exclusion on the
   * commit file" requirement (on S3-class stores this would ride a
   * conditional PUT / DynamoDB lock, same contract).
@@ -4228,8 +4228,8 @@ final case class DeltaTable(root: String) {
 
   /** Change-data feed over `(fromVersion, toVersion]`: every row added
     * or removed by commits in the range, tagged `_change_type`
-    * (`insert` | `delete`) and `_commit_version` — file-level CDC, the
-    * same contract as [[TxTable.changes]]. Actions with
+    * (`insert` | `delete`) and `_commit_version` — file-level CDC (an
+    * overwrite reports the outgoing snapshot as deletes). Actions with
     * `dataChange=false` (compaction rewrites) are SKIPPED, per the
     * protocol — an OPTIMIZE between two versions contributes nothing to
     * the feed. The plan reads ONLY the changed files, so incremental

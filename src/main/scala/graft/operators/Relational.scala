@@ -288,8 +288,12 @@ object Sampling {
     // dominant cost of every ordered-statistic query); the HOF evaluates
     // the same comparisons in one tight loop. NULL parity with the fold:
     // a NULL v (or edge) yields a NULL predicate, which filter() drops —
-    // exactly the 0 the when(...).otherwise(0) fold contributed.
-    val band = size(filter(col("band_edges"),
+    // exactly the 0 the when(...).otherwise(0) fold contributed. A
+    // non-empty input whose v is all NULL has NULL edges; size() of that
+    // is NULL (or -1 under legacy sizeOfNull), so the edges default to
+    // the empty array and such rows land in band 0, as in the fold.
+    val band = size(filter(
+      coalesce(col("band_edges"), typedLit(Array.empty[Double])),
       e => v.cast("double") >= e))
     df.join(broadcast(edges)).withColumn("band", band).drop("band_edges")
   }

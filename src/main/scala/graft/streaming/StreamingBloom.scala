@@ -21,13 +21,13 @@ import graft.operators.Bloom
   *      Bloom filters over disjoint corpora IS the bitwise OR, so the
   *      filter is maintained additively, never rebuilt.
   *
-  * Round-9 change: the filter lives in a [[graft.lake.TxTable]] and its
+  * Round-9 change: the filter lives in a [[graft.lake.DeltaTable]] and its
   * per-batch update is an overwrite COMMIT, not a raw parquet overwrite.
   * The raw pattern (merge → localCheckpoint → overwrite) deleted the old
   * filter files before the new ones landed, so a crash mid-overwrite left
   * NO filter — and a Bloom filter that vanishes silently degrades every
   * later batch to full-table verification. With the commit protocol the
-  * old snapshot's files are immutable until the atomic manifest link
+  * old snapshot's files are immutable until the atomic log-commit link
   * flips, a crash at any point leaves the previous filter readable (the
   * filter is conservative state: an older filter is still CORRECT, just
   * admits more verify work), and the pre-publish localCheckpoint is
@@ -50,7 +50,7 @@ object StreamingBloom {
 
   /** Create empty fingerprint/filter artifacts for a fresh corpus. The
     * fingerprint table is a plain append-only parquet dir; the filter is
-    * a TxTable whose first commit is the empty relation. */
+    * a DeltaTable whose version 0 is the empty relation. */
   def ensureArtifacts(spark: SparkSession, fpPath: String,
       bloomPath: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(fpPath)
@@ -59,9 +59,9 @@ object StreamingBloom {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], FpSchema)
         .write.parquet(fpPath)
-    val tx = graft.lake.TxTable(bloomPath)
-    if (tx.latestVersion.isEmpty)
-      tx.overwrite(spark.createDataFrame(
+    val filter = graft.lake.DeltaTable(bloomPath)
+    if (filter.latestVersion.isEmpty)
+      filter.overwrite(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], FilterSchema))
     ()
   }
@@ -69,7 +69,7 @@ object StreamingBloom {
   /** The live filter snapshot (readers go through the table — a crashed
     * commit attempt is invisible). */
   def readFilter(spark: SparkSession, bloomPath: String): DataFrame =
-    graft.lake.TxTable(bloomPath).read(spark)
+    graft.lake.DeltaTable(bloomPath).read(spark)
 
   /** Start the ingest: `incoming` carries (doc_id, text). Accepted novel
     * rows land in `outPath` as (doc_id, fingerprint, bloom_hit). */
@@ -87,8 +87,8 @@ object StreamingBloom {
           .groupBy(col("fingerprint")).agg(min(col("doc_id")).as("doc_id"))
           .persist()
         try {
-          val txBloom = graft.lake.TxTable(bloomPath)
-          val filter = txBloom.read(spark)
+          val bloomTable = graft.lake.DeltaTable(bloomPath)
+          val filter = bloomTable.read(spark)
           val flagged = Bloom.probe(inc, filter, bits, k)
           val ex = spark.read.schema(FpSchema).parquet(fpPath)
           val novel = flagged.filter(col("bloom_hit") === 0).unionByName(
@@ -103,13 +103,16 @@ object StreamingBloom {
           // the live snapshot's immutable files while the new ones land,
           // so no pre-publish checkpoint is needed and a crash leaves the
           // previous (still-correct, merely older) filter live
-          txBloom.overwrite(filter
+          bloomTable.overwrite(filter
             .unionByName(Bloom.build(novel.select(col("fingerprint")), bits, k))
             .groupBy(col("word"))
             .agg(expr("bit_or(bits)").as("bits")))
           // every overwrite retains the prior snapshot's files: bound the
-          // few-KB-per-version growth for a long-running stream
-          txBloom.vacuum(keepVersions)
+          // few-KB-per-version growth for a long-running stream. Zero
+          // retention is safe because this serial foreachBatch is the
+          // table's only writer (no in-flight commit to protect); Delta's
+          // default 7-day horizon would keep every version's files
+          bloomTable.vacuum(keepVersions, retentionMs = 0L)
         } finally inc.unpersist(false)
         ()
       }

@@ -16,8 +16,11 @@ import graft.operators.Sketches
   * by `batch_id`, and the serve path dedups (batch_id, j, bucket) before
   * re-summing: at-least-once ingest, exactly-once serve — the
   * [[StreamingImportance]] postings convention. The artifact rides a
-  * [[graft.lake.TxTable]] commit (crash mid-append leaves orphan files,
-  * never a torn cell row).
+  * [[graft.lake.DeltaTable]] commit (crash mid-append leaves orphan files,
+  * never a torn cell row). The append is a plain one, not
+  * `appendIdempotent`: a restarted stream's batchIds begin again at 0,
+  * so a batchId watermark would drop its first batches, and the serve
+  * dedup already collapses replays.
   *
   * 100 TB shape: per batch one vocab census + a ≤ d·w-row partial; serve
   * folds partials cell-wise (map-side combinable) and probes against the
@@ -31,7 +34,7 @@ object StreamingCms {
 
   /** The accumulated cell-partial artifact. */
   def readCells(spark: SparkSession, cmsPath: String): DataFrame =
-    graft.lake.TxTable(cmsPath).read(spark)
+    graft.lake.DeltaTable(cmsPath).read(spark)
 
   /** The deduped, folded d×w grid — equivalent to [[Sketches.cmsBuild]]
     * over everything ingested exactly once. */
@@ -52,8 +55,8 @@ object StreamingCms {
       checkpointDir: Option[String] = None): StreamingQuery = {
     val writer = incoming.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.lake.TxTable(cmsPath)
-          .appendWithRetry(batchCells(batch, batchId, itemCol, d, w))
+        graft.lake.DeltaTable(cmsPath)
+          .append(batchCells(batch, batchId, itemCol, d, w))
         ()
       }
     checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()

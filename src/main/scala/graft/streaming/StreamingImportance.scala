@@ -46,11 +46,11 @@ object StreamingImportance {
       .agg(count(lit(1)).as("tf"))
       .withColumn("batch_id", lit(batchId))
 
-  /** The accumulated postings artifact (a [[graft.lake.TxTable]] since
-    * round 10 — a crashed append leaves orphan files no manifest
-    * references, never a torn part-file in the serve scan). */
+  /** The accumulated postings artifact (a [[graft.lake.DeltaTable]] — a
+    * crashed append leaves orphan files no commit references, never a
+    * torn part-file in the serve scan). */
   def readPostings(spark: SparkSession, postingsPath: String): DataFrame =
-    graft.lake.TxTable(postingsPath).read(spark)
+    graft.lake.DeltaTable(postingsPath).read(spark)
 
   /** Serve the weights for every ingested document — the exact batch
     * algebra over the deduped postings relation. */
@@ -82,8 +82,8 @@ object StreamingImportance {
       checkpointDir: Option[String] = None): StreamingQuery = {
     val writer = incoming.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.lake.TxTable(postingsPath)
-          .appendWithRetry(batchPostings(batch, batchId, isTarget, dim))
+        graft.lake.DeltaTable(postingsPath)
+          .append(batchPostings(batch, batchId, isTarget, dim))
         ()
       }
     checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()

@@ -30,15 +30,15 @@ import graft.operators.Dedup
   * filter below keeps a replayed batch from pairing docs with their own
   * previously-appended bands, and a replay's duplicate pair/band rows are
   * removed by the downstream `distinct` the pair consumers already run —
-  * on a lake with atomic multi-table commits (e.g. Delta, absent in this
-  * environment) both appends would instead share one transaction.
+  * on a lake with atomic multi-table commits both appends would instead
+  * share one transaction.
   *
   * Round-10 change: the band TABLE (the durable corpus artifact) is a
-  * [[TxTable]] and each batch's band rows land via `appendWithRetry` —
-  * data files first, then one atomic manifest link. A raw parquet append
+  * [[graft.lake.DeltaTable]] and each batch's band rows land via `append`
+  * — data files first, then one atomic log commit. A raw parquet append
   * that crashes mid-job can leave a torn part-file that fails EVERY later
   * probe scan; under the commit protocol a crash between write and
-  * publish leaves orphan files no manifest references — the table stays
+  * publish leaves orphan files no commit references — the table stays
   * readable and the replayed batch re-appends cleanly. `pairsPath` stays
   * a plain append sink: it is an OUTPUT, deduped by consumers, not state
   * the stream itself re-reads. */
@@ -51,12 +51,12 @@ object StreamingNearDup {
 
   /** Create an empty corpus band table at `bandsPath` if none exists —
     * first deployment of a fresh corpus; thereafter the table is the
-    * accumulated history (a [[graft.lake.TxTable]]: version 1 is the
+    * accumulated history (a [[graft.lake.DeltaTable]]: version 0 is the
     * empty relation with the band schema recorded). */
   def ensureBandTable(spark: SparkSession, bandsPath: String): Unit = {
-    val tx = graft.lake.TxTable(bandsPath)
-    if (tx.latestVersion.isEmpty)
-      tx.overwrite(spark.createDataFrame(
+    val bands = graft.lake.DeltaTable(bandsPath)
+    if (bands.latestVersion.isEmpty)
+      bands.overwrite(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], BandSchema))
     ()
   }
@@ -64,7 +64,7 @@ object StreamingNearDup {
   /** The accumulated corpus band table (readers go through the table —
     * a crashed append attempt is invisible). */
   def readBands(spark: SparkSession, bandsPath: String): DataFrame =
-    graft.lake.TxTable(bandsPath).read(spark)
+    graft.lake.DeltaTable(bandsPath).read(spark)
 
   /** Start the ingest: `incoming` must carry (doc_id, text). Pairs land in
     * `pairsPath` as (doc_a, doc_b); bands accumulate in `bandsPath`. */
@@ -85,7 +85,7 @@ object StreamingNearDup {
             // table; never pair a doc with itself
             .filter(col("doc_a") =!= col("doc_b"))
             .write.mode("append").parquet(pairsPath)
-          graft.lake.TxTable(bandsPath).appendWithRetry(incBands)
+          graft.lake.DeltaTable(bandsPath).append(incBands)
         } finally incBands.unpersist(false)
         ()
       }

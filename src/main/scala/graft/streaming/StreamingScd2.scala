@@ -3,20 +3,20 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.lake.TxTable
+import graft.lake.DeltaTable
 import graft.operators.Evolve
 
 /** Streaming twin of [[Evolve.scd2Merge]] — continuous CDC ingest into a
   * versioned dimension: each micro-batch of updates merges against the
   * persisted dimension snapshot and publishes the next snapshot through a
-  * [[TxTable]] commit (read snapshot → merge → overwrite-commit).
+  * [[DeltaTable]] commit (read snapshot → merge → overwrite-commit).
   *
   * Round-9 change: the publish step rides the transactional table instead
   * of a raw parquet overwrite. A raw overwrite deletes the old files
   * before the new ones land, so a crash mid-overwrite TORCHES the
-  * dimension — the exact failure TxTable was built to remove. With the
-  * commit protocol, new data files land under fresh names while the old
-  * snapshot's files stay untouched; only the atomic manifest link flips
+  * dimension — the exact failure a table commit protocol removes. With
+  * the commit protocol, new data files land under fresh names while the
+  * old snapshot's files stay untouched; only the atomic log commit flips
   * the table, so a crash at ANY point leaves the previous snapshot
   * readable and the replayed batch re-merges into a fresh commit. This
   * also retires the pre-publish `localCheckpoint` the raw pattern needed
@@ -43,14 +43,14 @@ object StreamingScd2 {
   /** Publish the seed snapshot (rows already in SCD2 shape: attrs +
     * valid_from / valid_to) as the table's first committed version. */
   def init(seed: DataFrame, dimPath: String): Unit = {
-    TxTable(dimPath).overwrite(seed)
+    DeltaTable(dimPath).overwrite(seed)
     ()
   }
 
   /** The current dimension snapshot (readers go through the table, not
     * the raw files — half-written commit attempts are invisible). */
   def readDim(spark: SparkSession, dimPath: String): DataFrame =
-    TxTable(dimPath).read(spark)
+    DeltaTable(dimPath).read(spark)
 
   /** Start the ingest. `asOfOf` stamps each micro-batch's effective time
     * (deterministic per batchId — wall-clock stamps would break replay).
@@ -59,7 +59,10 @@ object StreamingScd2 {
     * the previous snapshot's files on disk, so a long-running stream
     * would otherwise grow storage by one full dimension copy per batch —
     * each batch vacuums down to the newest `keepVersions` snapshots
-    * (time travel reaches exactly that window). */
+    * (time travel reaches exactly that window). The vacuum runs with zero
+    * retention because this serial foreachBatch is the table's only
+    * writer, so no in-flight commit can lose its files; Delta's default
+    * 7-day horizon would keep every batch's copy and void the bound. */
   def start(updates: DataFrame, dimPath: String, key: String,
       attrs: Seq[String], asOfOf: Long => Column,
       checkpointDir: Option[String] = None,
@@ -67,10 +70,10 @@ object StreamingScd2 {
     val spark = updates.sparkSession
     val writer = updates.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tx = TxTable(dimPath)
-        tx.overwrite(
-          Evolve.scd2Merge(tx.read(spark), batch, key, attrs, asOfOf(batchId)))
-        tx.vacuum(keepVersions)
+        val dim = DeltaTable(dimPath)
+        dim.overwrite(
+          Evolve.scd2Merge(dim.read(spark), batch, key, attrs, asOfOf(batchId)))
+        dim.vacuum(keepVersions, retentionMs = 0L)
         ()
       }
     checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()

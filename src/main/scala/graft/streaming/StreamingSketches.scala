@@ -21,30 +21,30 @@ import graft.operators.Sketches
   * five times (spec-asserted). This is the property that makes sketches,
   * not raw counts, the right streaming accumulator: a replayed COUNT row
   * would double-count. (Round-10: the append itself still rides a
-  * [[graft.lake.TxTable]] commit — idempotent MERGE semantics don't help
-  * against a torn part-file from a crash mid-write; the manifest link
-  * does.)
+  * [[graft.lake.DeltaTable]] commit — idempotent MERGE semantics don't
+  * help against a torn part-file from a crash mid-write; the atomic log
+  * commit does.)
   *
   * Executor memory is O(cells in the micro-batch); history is never
   * rescanned. */
 object StreamingSketches {
 
-  /** The accumulated sketch artifact (a [[graft.lake.TxTable]] since
-    * round 10 — readers go through the table, so a crashed append or a
-    * compaction in flight is invisible). */
+  /** The accumulated sketch artifact (a [[graft.lake.DeltaTable]] —
+    * readers go through the table, so a crashed append or a compaction in
+    * flight is invisible). */
   def readSketches(spark: SparkSession, sketchPath: String): DataFrame =
-    graft.lake.TxTable(sketchPath).read(spark)
+    graft.lake.DeltaTable(sketchPath).read(spark)
 
   /** Start the ingest: commit each micro-batch's (cells..., sketch) rows
-    * onto `sketchPath` via `appendWithRetry`. `incoming` must carry
-    * `cells` and `value`. A first batch on a fresh path creates v1. */
+    * onto `sketchPath` via `append`. `incoming` must carry `cells` and
+    * `value`. A first batch on a fresh path creates version 0. */
   def start(incoming: DataFrame, cells: Seq[String], value: String,
       sketchPath: String, lgK: Int = Sketches.HllLgK,
       checkpointDir: Option[String] = None): StreamingQuery = {
     val writer = incoming.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.lake.TxTable(sketchPath)
-          .appendWithRetry(Sketches.hllBuild(batch, cells, value, lgK))
+        graft.lake.DeltaTable(sketchPath)
+          .append(Sketches.hllBuild(batch, cells, value, lgK))
         ()
       }
     checkpointDir.fold(writer)(writer.option("checkpointLocation", _)).start()
@@ -58,8 +58,8 @@ object StreamingSketches {
     * crash mid-compaction leaves the uncompacted snapshot live. */
   def compact(spark: SparkSession, sketchPath: String,
       cells: Seq[String]): Unit = {
-    val tx = graft.lake.TxTable(sketchPath)
-    tx.overwrite(tx.read(spark)
+    val sketches = graft.lake.DeltaTable(sketchPath)
+    sketches.overwrite(sketches.read(spark)
       .groupBy(cells.map(col): _*)
       .agg(org.apache.spark.sql.functions.hll_union_agg(col("sketch")).as("sketch")))
     ()

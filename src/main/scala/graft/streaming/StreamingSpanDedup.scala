@@ -36,13 +36,14 @@ object StreamingSpanDedup {
     .add("span_hash", StringType).add("n", LongType)
 
   /** Create an empty census at `censusPath` if none exists (a
-    * [[graft.lake.TxTable]] — round-10: census appends ride manifest
-    * commits, so a crash mid-append leaves orphan files no manifest
-    * references instead of a torn part-file that fails every probe). */
+    * [[graft.lake.DeltaTable]] whose version 0 is the empty relation —
+    * census appends ride log commits, so a crash mid-append leaves orphan
+    * files no commit references instead of a torn part-file that fails
+    * every probe). */
   def ensureCensus(spark: SparkSession, censusPath: String): Unit = {
-    val tx = graft.lake.TxTable(censusPath)
-    if (tx.latestVersion.isEmpty)
-      tx.overwrite(spark.createDataFrame(
+    val census = graft.lake.DeltaTable(censusPath)
+    if (census.latestVersion.isEmpty)
+      census.overwrite(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CensusSchema))
     ()
   }
@@ -50,7 +51,7 @@ object StreamingSpanDedup {
   /** The accumulated span census (readers go through the table — a
     * crashed append attempt is invisible). */
   def readCensus(spark: SparkSession, censusPath: String): DataFrame =
-    graft.lake.TxTable(censusPath).read(spark)
+    graft.lake.DeltaTable(censusPath).read(spark)
 
   /** One batch step, also usable for batch-incremental replay: report for
     * `batch` docs against (accumulated census + in-batch counts). Returns
@@ -74,7 +75,7 @@ object StreamingSpanDedup {
       // files, but the report consumer may collect() after this method
       // appended — keep the materialization barrier.)
       val report = SpanDedup.reportFromDuplicated(batch, dup, k).localCheckpoint()
-      if (append) graft.lake.TxTable(censusPath).appendWithRetry(batchCounts)
+      if (append) graft.lake.DeltaTable(censusPath).append(batchCounts)
       report
     } finally { spans.unpersist(false); () }
   }

@@ -21,6 +21,16 @@ trait SparkSpec extends AnyFunSuite {
 
   def rowsOf(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** Land `df`'s parquet parts in a fresh subdirectory of the table at
+    * `root` WITHOUT a commit — what a writer leaves when it dies between
+    * staging its data files and publishing the commit. Returns the
+    * directory. */
+  def landUncommitted(df: DataFrame, root: String): java.nio.file.Path = {
+    val dir = java.nio.file.Paths.get(root, s"crashed-${java.util.UUID.randomUUID}")
+    df.write.parquet(dir.toString)
+    dir
+  }
 }
 
 object SparkSpec {

@@ -1,48 +1,50 @@
 package graft.lake
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.operators.Evolve
 
-/** Transactional table protocol: snapshot isolation for concurrent
-  * readers, crash safety of the two-step WRITE→PUBLISH commit, re-run
-  * convergence, append/overwrite/time-travel semantics, vacuum. */
+/** Transactional table protocol as the lake's writers use it: snapshot
+  * isolation for concurrent readers, crash safety of staging data files
+  * before the atomic commit publish, re-run convergence, append/
+  * overwrite/time-travel semantics, the change feed, vacuum. */
 class TxLakeSpec extends SparkSpec {
 
-  private def tmpTable(): TxTable =
-    TxTable(Files.createTempDirectory("txlake").toString + "/t")
+  private def tmpTable(): DeltaTable =
+    DeltaTable(Files.createTempDirectory("txlake").toString + "/t")
 
   private def vals(df: org.apache.spark.sql.DataFrame): Set[(Int, String)] =
-    df.collect().map(r => (r.getInt(0), r.getString(1))).toSet
+    df.select("k", "s").collect().map(r => (r.getInt(0), r.getString(1))).toSet
 
   test("overwrite commits versions; time travel reads any retained snapshot") {
     import spark.implicits._
     val t = tmpTable()
     assert(t.latestVersion.isEmpty)
-    val v1 = t.overwrite(Seq((1, "a"), (2, "b")).toDF("k", "s"))
-    val v2 = t.overwrite(Seq((3, "c")).toDF("k", "s"))
-    assert((v1, v2) == ((1L, 2L)) && t.latestVersion.contains(2L))
+    val v0 = t.overwrite(Seq((1, "a"), (2, "b")).toDF("k", "s"))
+    val v1 = t.overwrite(Seq((3, "c")).toDF("k", "s"))
+    assert((v0, v1) == ((0L, 1L)) && t.latestVersion.contains(1L))
     assert(vals(t.read(spark)) == Set((3, "c")))
-    assert(vals(t.read(spark, Some(1L))) == Set((1, "a"), (2, "b")))
+    assert(vals(t.read(spark, Some(0L))) == Set((1, "a"), (2, "b")))
   }
 
   test("append extends the snapshot; old files are never rewritten") {
     import spark.implicits._
     val t = tmpTable()
     t.overwrite(Seq((1, "a")).toDF("k", "s"))
-    val before = t.filesAt(1L)
+    val before = t.read(spark, Some(0L)).inputFiles.toSet
     t.append(Seq((2, "b")).toDF("k", "s"))
     assert(vals(t.read(spark)) == Set((1, "a"), (2, "b")))
-    // v2's manifest carries v1's files forward untouched
-    assert(t.filesAt(2L).toSet.intersect(before.toSet) == before.toSet)
+    // v1's snapshot carries v0's files forward untouched
+    assert(before.nonEmpty && before.subsetOf(t.read(spark, Some(1L)).inputFiles.toSet))
   }
 
   test("snapshot isolation: a reader pinned before an overwrite still sees its version") {
     import spark.implicits._
     val t = tmpTable()
     t.overwrite(Seq((1, "old")).toDF("k", "s"))
-    val pinned = t.read(spark) // resolves v1's immutable file list
+    val pinned = t.read(spark) // resolves v0's immutable file list
     t.overwrite(Seq((2, "new")).toDF("k", "s"))
     assert(vals(pinned) == Set((1, "old")), "reader saw a concurrent write")
     assert(vals(t.read(spark)) == Set((2, "new")))
@@ -52,17 +54,23 @@ class TxLakeSpec extends SparkSpec {
     import spark.implicits._
     val t = tmpTable()
     t.overwrite(Seq((1, "live")).toDF("k", "s"))
+    val dead = Seq((9, "dead")).toDF("k", "s")
     // simulate a writer dying after landing data files, before publishing
-    val orphans = t.writeData(Seq((9, "dead")).toDF("k", "s"), v = 2L)
-    assert(orphans.nonEmpty)
-    assert(t.latestVersion.contains(1L), "unpublished write changed the version")
+    val orphanDir = landUncommitted(dead, t.root)
+    def orphans: Int = if (!Files.exists(orphanDir)) 0
+      else Files.walk(orphanDir).iterator.asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+    val landed = orphans
+    assert(landed > 0)
+    assert(t.latestVersion.contains(0L), "unpublished write changed the version")
     assert(vals(t.read(spark)) == Set((1, "live")), "orphan files leaked into a read")
     // re-run of the same logical commit converges on a good new version
-    val v2 = t.overwrite(Seq((9, "dead")).toDF("k", "s"))
-    assert(v2 == 2L && vals(t.read(spark)) == Set((9, "dead")))
-    // vacuum drops the crashed attempt's orphans and v1's now-unreferenced file
-    val dropped = t.vacuum(keepVersions = 1)
-    assert(dropped >= orphans.size, s"vacuum removed $dropped")
+    assert(t.overwrite(dead) == 1L)
+    assert(vals(t.read(spark)) == Set((9, "dead")))
+    // vacuum drops the crashed attempt's orphans and v0's now-unreferenced file
+    val dropped = t.vacuum(1, retentionMs = 0L)
+    assert(dropped >= landed, s"vacuum removed $dropped")
+    assert(orphans == 0, "vacuum left the crashed attempt's files")
     assert(vals(t.read(spark)) == Set((9, "dead")), "vacuum touched live files")
   }
 
@@ -71,88 +79,41 @@ class TxLakeSpec extends SparkSpec {
     val t = tmpTable()
     t.overwrite(Seq((1, "a")).toDF("k", "s"))
     val e = intercept[IllegalStateException] {
-      t.publish(1L, Seq("phantom.parquet"))
+      t.publish(0L, Seq("{\"commitInfo\":{}}"))
     }
     assert(e.getMessage.contains("concurrent commit"))
-    // the loser's temp manifest is cleaned up, the winner's intact
+    // the loser's temp commit file is cleaned up, the winner's intact
     assert(vals(t.read(spark)) == Set((1, "a")))
+    assert(!Files.list(java.nio.file.Paths.get(t.root, "_delta_log")).iterator.asScala
+      .exists(_.getFileName.toString.startsWith(".tmp-")), "loser's temp file left")
   }
 
   test("changes: appends yield exact row-level inserts per commit; overwrite reports churn") {
     import spark.implicits._
     val t = tmpTable()
-    t.overwrite(Seq((1, "a")).toDF("k", "s"))              // v1
-    t.append(Seq((2, "b")).toDF("k", "s"))                 // v2
-    t.append(Seq((3, "c")).toDF("k", "s"))                 // v3
-    val feed = t.changes(spark, 1L, 3L)
-      .collect().map(r => (r.getInt(0), r.getString(1),
+    t.overwrite(Seq((1, "a")).toDF("k", "s"))              // v0
+    t.append(Seq((2, "b")).toDF("k", "s"))                 // v1
+    t.append(Seq((3, "c")).toDF("k", "s"))                 // v2
+    val feed = t.changes(spark, 0L, 2L)
+      .collect().map(r => (r.getAs[Int]("k"), r.getAs[String]("s"),
         r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version"))).toSet
-    assert(feed == Set((2, "b", "insert", 2L), (3, "c", "insert", 3L)),
+    assert(feed == Set((2, "b", "insert", 1L), (3, "c", "insert", 2L)),
       s"append-only CDC feed wrong: $feed")
     // an overwrite reports the outgoing snapshot as deletes, incoming as inserts
-    t.overwrite(Seq((9, "z")).toDF("k", "s"))              // v4
-    val churn = t.changes(spark, 3L, 4L)
-      .collect().map(r => (r.getInt(0), r.getAs[String]("_change_type"))).toSet
+    t.overwrite(Seq((9, "z")).toDF("k", "s"))              // v3
+    val churn = t.changes(spark, 2L, 3L)
+      .collect().map(r => (r.getAs[Int]("k"), r.getAs[String]("_change_type"))).toSet
     assert(churn == Set((9, "insert"), (1, "delete"), (2, "delete"), (3, "delete")))
     // a same-version range is an empty feed with the CDC schema
-    val empty = t.changes(spark, 4L, 4L)
+    val empty = t.changes(spark, 3L, 3L)
     assert(empty.isEmpty && empty.columns.contains("_change_type"))
-  }
-
-  test("appendWithRetry: two concurrent appenders both succeed with sequential versions") {
-    import spark.implicits._
-    val t = tmpTable()
-    t.overwrite(Seq((1, "base")).toDF("k", "s"))
-    // genuinely concurrent: both threads resolve the same base version,
-    // race the publish link, and the loser retries on top of the winner
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val futures = Seq("a1" -> 10, "a2" -> 20).map { case (s, k) =>
-        pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = {
-            val df = Seq((k, s)).toDF("k", "s")
-            barrier.await()
-            t.appendWithRetry(df)
-          }
-        })
-      }
-      val versions = futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
-      assert(versions.toSet == Set(2L, 3L), s"expected v2+v3, got $versions")
-    } finally pool.shutdown()
-    assert(vals(t.read(spark)) == Set((1, "base"), (10, "a1"), (20, "a2")),
-      "a racing append lost rows")
-  }
-
-  test("appendWithRetry: deterministic version race retries; append racing an overwrite aborts") {
-    import spark.implicits._
-    val t = tmpTable()
-    t.overwrite(Seq((1, "base")).toDF("k", "s"))                  // v1
-    // appender lands its data files while pinned to base v1 ...
-    val moved = t.writeData(Seq((2, "mine")).toDF("k", "s"), v = 2L)
-    val schema = t.read(spark).schema
-    // ... then a concurrent APPEND wins v2 first: blind appends commute,
-    // so the retry publishes v3 carrying both
-    t.append(Seq((3, "theirs")).toDF("k", "s"))                   // v2
-    val v = t.retryPublish(base = Some(1L), moved = moved, dfSchema = schema)
-    assert(v == 3L)
-    assert(vals(t.read(spark)) == Set((1, "base"), (2, "mine"), (3, "theirs")))
-    // an intervening OVERWRITE removed the base files — the append's
-    // logical base is gone, so the retry must abort loudly
-    val moved2 = t.writeData(Seq((4, "late")).toDF("k", "s"), v = 4L)
-    t.overwrite(Seq((9, "replaced")).toDF("k", "s"))              // v4
-    val e = intercept[IllegalStateException] {
-      t.retryPublish(base = Some(3L), moved = moved2, dfSchema = schema)
-    }
-    assert(e.getMessage.contains("concurrent overwrite"))
-    assert(vals(t.read(spark)) == Set((9, "replaced")), "aborted append leaked")
   }
 
   test("schema evolution: add-column append; old snapshots keep their own schema") {
     import spark.implicits._
     val t = tmpTable()
-    t.overwrite(Seq((1, "a")).toDF("k", "s"))                     // v1: (k, s)
-    t.append(Seq((2, "b", 0.5)).toDF("k", "s", "score"))          // v2: (k, s, score)
+    t.overwrite(Seq((1, "a")).toDF("k", "s"))                     // v0: (k, s)
+    t.append(Seq((2, "b", 0.5)).toDF("k", "s", "score"))          // v1: (k, s, score)
     // latest snapshot: merged schema, nulls for the old file's missing column
     val latest = t.read(spark)
     assert(latest.columns.toSeq == Seq("k", "s", "score"))
@@ -161,41 +122,15 @@ class TxLakeSpec extends SparkSpec {
         if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
     assert(rows == Set((1, "a", None), (2, "b", Some(0.5))))
     // time travel returns each version's OWN schema, not today's
-    assert(t.read(spark, Some(1L)).columns.toSeq == Seq("k", "s"))
-    assert(t.schemaAt(1L).map(_.fieldNames.toSeq).contains(Seq("k", "s")))
+    assert(t.read(spark, Some(0L)).columns.toSeq == Seq("k", "s"))
     // appends may omit old columns: nulls, not failure
-    t.append(Seq((3, 0.9)).toDF("k", "score"))                    // v3
-    val v3 = t.read(spark).collect()
+    t.append(Seq((3, 0.9)).toDF("k", "score"))                    // v2
+    val v2 = t.read(spark).collect()
       .map(r => (r.getInt(0), Option(r.getString(1)))).toSet
-    assert(v3 == Set((1, Some("a")), (2, Some("b")), (3, None)))
+    assert(v2 == Set((1, Some("a")), (2, Some("b")), (3, None)))
     // a type conflict on an existing column aborts instead of widening
     val conflict = intercept[IllegalStateException] {
       t.append(Seq((4, 7)).toDF("k", "score")) // score int vs double
-    }
-    assert(conflict.getMessage.contains("type conflict"))
-  }
-
-  test("append onto a LEGACY (schema-less) manifest infers the base schema from footers") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val t = tmpTable()
-    // simulate a pre-schema-tracking table: data files + a manifest with
-    // no schema= line (the package-private no-schema publish form)
-    val moved = t.writeData(Seq((1, "a"), (2, "b")).toDF("k", "s"), v = 1L)
-    t.publish(1L, moved)
-    assert(t.schemaAt(1L).isEmpty, "fixture must be schema-less")
-    // an append that OMITS column s must not shadow it: the recorded
-    // merged schema has to carry the footer-inferred (k, s) base
-    t.append(Seq(3).toDF("k"))
-    val latest = t.read(spark)
-    assert(latest.columns.toSeq == Seq("k", "s"),
-      s"legacy column dropped: ${latest.columns.toSeq}")
-    val rows = latest.collect()
-      .map(r => (r.getInt(0), Option(r.getString(1)))).toSet
-    assert(rows == Set((1, Some("a")), (2, Some("b")), (3, None)))
-    // and a type conflict against the INFERRED base still aborts
-    val conflict = intercept[IllegalStateException] {
-      t.append(Seq((4, 1.5)).toDF("k", "s").select(col("k"), col("s")))
     }
     assert(conflict.getMessage.contains("type conflict"))
   }
@@ -211,6 +146,6 @@ class TxLakeSpec extends SparkSpec {
     assert(vals(t.read(spark)) ==
       Set((1, "patched"), (2, "keep"), (3, "inserted")))
     // the pre-merge snapshot is still time-travelable
-    assert(vals(t.read(spark, Some(1L))) == Set((1, "init"), (2, "keep")))
+    assert(vals(t.read(spark, Some(0L))) == Set((1, "init"), (2, "keep")))
   }
 }

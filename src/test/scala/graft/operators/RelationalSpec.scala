@@ -59,4 +59,20 @@ class RelationalSpec extends SparkSpec {
     val top2 = Relational.limitOrdered(test1, Seq(col("Salary").desc, col("Name")), 2)
     assert(rowsOf(top2.select("Name")).flatten == Seq("Krish", "Sudhanshu"))
   }
+
+  test("withRangeBand on degenerate input: all-NULL values band 0; empty stays empty") {
+    import spark.implicits._
+    val allNull = Seq[Option[Double]](None, None, None).toDF("v")
+    Seq("false", "true").foreach { legacy =>
+      spark.conf.set("spark.sql.legacy.sizeOfNull", legacy)
+      try {
+        val bands = Sampling.withRangeBand(allNull, col("v"), 4)
+          .select("band").collect().map(r => Option(r.get(0)))
+        assert(bands.toSeq == Seq.fill(3)(Some(0)),
+          s"sizeOfNull=$legacy: ${bands.mkString(",")}")
+      } finally spark.conf.unset("spark.sql.legacy.sizeOfNull")
+    }
+    val empty = Sampling.withRangeBand(allNull.limit(0), col("v"), 4)
+    assert(empty.count() == 0 && empty.columns.contains("band"))
+  }
 }

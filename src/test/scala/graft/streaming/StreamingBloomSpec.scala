@@ -30,11 +30,11 @@ class StreamingBloomSpec extends SparkSpec {
     val delta2 = docs.filter(col("doc_id") >= 400)
 
     // day 0: persisted fingerprint table + its Bloom filter (the filter
-    // is a TxTable — its updates are commits, not raw overwrites)
+    // is a DeltaTable — its updates are commits, not raw overwrites)
     val corpusFps = corpus.select(Text.fingerprint(col("text")).as("fingerprint"))
       .distinct()
     corpusFps.write.parquet(fpPath)
-    graft.lake.TxTable(bloomPath).overwrite(Bloom.build(corpusFps))
+    graft.lake.DeltaTable(bloomPath).overwrite(Bloom.build(corpusFps))
 
     val mem = MemoryStream[(Long, String)]
     val q = StreamingBloom.start(
@@ -66,16 +66,16 @@ class StreamingBloomSpec extends SparkSpec {
     val rebuilt = filterBits(Bloom.build(spark.read.parquet(fpPath)))
     assert(maintained == rebuilt, "maintained filter diverged from rebuild")
 
-    // CRASH SAFETY (why the filter update is a TxTable commit): a writer
+    // CRASH SAFETY (why the filter update is a table commit): a writer
     // dying between the merged-filter WRITE and its publish leaves the
     // previous filter snapshot live — an older filter is conservative
     // (admits more verify work) but never wrong — and a replayed batch
     // converges: its rows all probe bloom-positive, the fp anti-join
     // drops them, and the filter OR is idempotent
-    val tx = graft.lake.TxTable(bloomPath)
-    val vBefore = tx.latestVersion.get
-    tx.writeData(Bloom.build(spark.read.parquet(fpPath)), v = vBefore + 1)
-    assert(tx.latestVersion.contains(vBefore), "crashed write changed the version")
+    val table = graft.lake.DeltaTable(bloomPath)
+    val vBefore = table.latestVersion.get
+    landUncommitted(Bloom.build(spark.read.parquet(fpPath)), bloomPath)
+    assert(table.latestVersion.contains(vBefore), "crashed write changed the version")
     assert(filterBits(StreamingBloom.readFilter(spark, bloomPath)) == maintained,
       "crashed publish torched the filter")
     val mem2 = MemoryStream[(Long, String)]

@@ -39,12 +39,12 @@ class StreamingCmsSpec extends SparkSpec {
 
     // replay batch 0 verbatim (same batch_id): at-least-once delivery —
     // the appended duplicate partials must collapse in the serve dedup
-    graft.lake.TxTable(path).appendWithRetry(
+    graft.lake.DeltaTable(path).append(
       StreamingCms.batchCells(day1.toDF("item"), 0L, "item", 3, 16))
     assert(grid() == batchGrid, "replayed batch_id must not double-count")
 
     // but the same rows under a NEW batch_id are genuinely new data
-    graft.lake.TxTable(path).appendWithRetry(
+    graft.lake.DeltaTable(path).append(
       StreamingCms.batchCells(Seq("hot").toDF("item"), 99L, "item", 3, 16))
     assert(grid() != batchGrid)
 

@@ -51,21 +51,21 @@ class StreamingImportanceSpec extends SparkSpec {
           (col("lang") === "en").as("is_t")),
         batchId = 1L, isTarget = col("is_t"), dim = 64)
       .localCheckpoint(true)
-    graft.lake.TxTable(path).appendWithRetry(replayRows)
+    graft.lake.DeltaTable(path).append(replayRows)
     assert(weightSet(StreamingImportance.serve(spark, path)) == batch,
       "replayed batch double-counted the postings")
 
-    // CRASH SAFETY: postings files landing without their manifest link
+    // CRASH SAFETY: postings files landing without their log commit
     // never reach the serve scan — weights hold — and the replayed
     // append commits on top, collapsing in the (batch_id, doc_id, slot)
     // dedup as usual
-    val tx = graft.lake.TxTable(path)
-    val vBefore = tx.latestVersion.get
-    tx.writeData(replayRows, v = vBefore + 1) // died before publish
-    assert(tx.latestVersion.contains(vBefore), "crashed write changed the version")
+    val table = graft.lake.DeltaTable(path)
+    val vBefore = table.latestVersion.get
+    landUncommitted(replayRows, path) // died before publish
+    assert(table.latestVersion.contains(vBefore), "crashed write changed the version")
     assert(weightSet(StreamingImportance.serve(spark, path)) == batch,
       "crashed append leaked postings into the serve path")
-    tx.appendWithRetry(replayRows)
+    table.append(replayRows)
     assert(weightSet(StreamingImportance.serve(spark, path)) == batch,
       "replay after crash double-counted")
   }

@@ -27,8 +27,8 @@ class StreamingNearDupSpec extends SparkSpec {
     val delta1 = docs.filter(col("doc_id") >= 300 && col("doc_id") < 400)
     val delta2 = docs.filter(col("doc_id") >= 400)
 
-    // day 0: the corpus band table is a persisted artifact (v1 commit)
-    graft.lake.TxTable(bandsPath).overwrite(Dedup.minhashBandsOf(corpus))
+    // day 0: the corpus band table is a persisted artifact (v0 commit)
+    graft.lake.DeltaTable(bandsPath).overwrite(Dedup.minhashBandsOf(corpus))
 
     val mem = MemoryStream[(Long, String)]
     val q = StreamingNearDup.start(
@@ -58,20 +58,20 @@ class StreamingNearDupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(bandSet == fullSet, "accumulated band table must equal full-corpus bands")
 
-    // CRASH SAFETY (the reason the append rides TxTable): a writer dying
-    // between write and publish — data files landed, manifest not
+    // CRASH SAFETY (the reason the append is a table commit): a writer
+    // dying between write and publish — data files landed, commit not
     // linked — leaves the band table readable at the previous version,
     // and the replayed append lands cleanly on top
-    val tx = graft.lake.TxTable(bandsPath)
-    val vBefore = tx.latestVersion.get
+    val table = graft.lake.DeltaTable(bandsPath)
+    val vBefore = table.latestVersion.get
     val extra = Dedup.minhashBandsOf(
       Seq((9999L, "crash probe text for the band table")).toDF("doc_id", "text"))
       .localCheckpoint(true)
-    tx.writeData(extra, v = vBefore + 1) // died before publish
-    assert(tx.latestVersion.contains(vBefore), "crashed write changed the version")
+    landUncommitted(extra, bandsPath) // died before publish
+    assert(table.latestVersion.contains(vBefore), "crashed write changed the version")
     assert(StreamingNearDup.readBands(spark, bandsPath).count() == fullSet.size,
       "crashed append leaked rows into the band table")
-    tx.appendWithRetry(extra) // the replay
+    table.append(extra) // the replay
     assert(StreamingNearDup.readBands(spark, bandsPath).count() ==
       fullSet.size + extra.count(), "replayed append did not land")
   }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -60,17 +62,17 @@ class StreamingScd2Spec extends SparkSpec {
       b1.toDF("k", "name", "seg"), "k", attrs, asOf(7))
     assert(snap(replayed) == streamed, "replay must be a no-op")
 
-    // CRASH SAFETY (the reason the publish rides TxTable): a writer dying
-    // between merge and publish — data files landed, manifest not linked —
+    // CRASH SAFETY (the reason the publish is a table commit): a writer
+    // dying between merge and publish — data files landed, commit not linked —
     // leaves the previous snapshot readable, and replaying the batch
     // through the stream converges to the correct next snapshot
-    val tx = graft.lake.TxTable(path)
-    val vBefore = tx.latestVersion.get
+    val table = graft.lake.DeltaTable(path)
+    val vBefore = table.latestVersion.get
     val b2 = Seq((2L, "b2", "Y"))
     val crashedMerge = Evolve.scd2Merge(StreamingScd2.readDim(spark, path),
       b2.toDF("k", "name", "seg"), "k", attrs, asOf(2))
-    tx.writeData(crashedMerge, v = vBefore + 1) // died before publish
-    assert(tx.latestVersion.contains(vBefore), "crashed write changed the version")
+    landUncommitted(crashedMerge, path) // died before publish
+    assert(table.latestVersion.contains(vBefore), "crashed write changed the version")
     assert(snap(StreamingScd2.readDim(spark, path)) == streamed,
       "crashed publish torched or mutated the dimension")
     // replay of the same logical batch (at-least-once delivery) — a fresh
@@ -83,5 +85,39 @@ class StreamingScd2Spec extends SparkSpec {
       "k", attrs, asOf(0))
     assert(snap(StreamingScd2.readDim(spark, path)) == snap(afterReplay),
       "replay after crash did not converge")
+  }
+
+  test("keepVersions bounds storage to the newest snapshots' files") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val path = java.nio.file.Files.createTempDirectory("scd2keep").toString + "/dim"
+    StreamingScd2.init(Seq((1L, "a", "X")).toDF("k", "name", "seg")
+      .select(col("k"), col("name"), col("seg"),
+        lit("2024-01-01").cast("timestamp").as("valid_from"),
+        lit(null).cast("timestamp").as("valid_to")), path)
+
+    val mem = MemoryStream[(Long, String, String)]
+    val q = StreamingScd2.start(mem.toDF().toDF("k", "name", "seg"),
+      path, "k", attrs, asOf, keepVersions = 2)
+    try (0 until 4).foreach { i =>
+      mem.addData((1L, s"a$i", "X"), (10L + i, "new", "N"))
+      q.processAllAvailable()
+    } finally q.stop()
+
+    // every batch overwrites the whole dimension; with Delta's default
+    // vacuum retention all five snapshots' files would still be on disk
+    val table = graft.lake.DeltaTable(path)
+    val latest = table.latestVersion.get
+    assert(latest == 4L)
+    val referenced = (latest - 1 to latest)
+      .flatMap(v => table.read(spark, Some(v)).inputFiles)
+      .map(_.split('/').last).toSet
+    val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      .iterator.asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+        !p.toString.contains("_delta_log"))
+      .map(_.getFileName.toString).toSet
+    assert(onDisk == referenced,
+      s"unreferenced=${onDisk -- referenced} missing=${referenced -- onDisk}")
   }
 }

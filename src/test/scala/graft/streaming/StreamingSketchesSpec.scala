@@ -60,18 +60,18 @@ class StreamingSketchesSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(estimates(path) == full)
 
-    // CRASH SAFETY: sketch files landing without their manifest link are
+    // CRASH SAFETY: sketch files landing without their log commit are
     // invisible to the serve path — estimates hold at the committed
     // snapshot — and the replayed append commits cleanly on top (then
     // merges idempotently, so estimates still don't move)
-    val tx = graft.lake.TxTable(path)
-    val vBefore = tx.latestVersion.get
+    val table = graft.lake.DeltaTable(path)
+    val vBefore = table.latestVersion.get
     val extra = Sketches.hllBuild(li.limit(50), cells, "l_partkey")
       .localCheckpoint(true)
-    tx.writeData(extra, v = vBefore + 1) // died before publish
-    assert(tx.latestVersion.contains(vBefore), "crashed write changed the version")
+    landUncommitted(extra, path) // died before publish
+    assert(table.latestVersion.contains(vBefore), "crashed write changed the version")
     assert(estimates(path) == full, "crashed append moved the estimates")
-    tx.appendWithRetry(extra) // the replay: a subset re-sketch is a no-op
+    table.append(extra) // the replay: a subset re-sketch is a no-op
     assert(estimates(path) == full, "replayed subset sketch moved the estimates")
   }
 }

@@ -67,21 +67,21 @@ class StreamingSpanDedupSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(acc == full, "accumulated census must equal full-corpus counts")
 
-    // CRASH SAFETY: census data files landing without their manifest link
+    // CRASH SAFETY: census data files landing without their log commit
     // are invisible — probes keep seeing the pre-crash counts, and the
     // replayed append commits on top
-    val tx = graft.lake.TxTable(censusPath)
-    val vBefore = tx.latestVersion.get
+    val table = graft.lake.DeltaTable(censusPath)
+    val vBefore = table.latestVersion.get
     val nBefore = StreamingSpanDedup.readCensus(spark, censusPath).count()
     val extra = SpanDedup.spanHashes(
         Seq((9999L, "crash probe span text here")).toDF("doc_id", "text"), K)
       .groupBy("span_hash").agg(count(lit(1)).as("n"))
       .localCheckpoint(true)
-    tx.writeData(extra, v = vBefore + 1) // died before publish
-    assert(tx.latestVersion.contains(vBefore), "crashed write changed the version")
+    landUncommitted(extra, censusPath) // died before publish
+    assert(table.latestVersion.contains(vBefore), "crashed write changed the version")
     assert(StreamingSpanDedup.readCensus(spark, censusPath).count() == nBefore,
       "crashed append leaked rows into the census")
-    tx.appendWithRetry(extra)
+    table.append(extra)
     assert(StreamingSpanDedup.readCensus(spark, censusPath).count() ==
       nBefore + extra.count(), "replayed append did not land")
   }

@@ -1,24 +1,34 @@
 #!/usr/bin/env python3
-"""Registry file-size guard: fail when any registry file outgrows 1500 lines.
+"""Source-shape guards. Exit 1 on any violation.
 
-The round-7 merge-conflict problem was a single 4752-line SparkEntry.scala
-absorbing ~8 new queries per round; the round-8 fix split it into per-family
-files under src/main/scala/graft/registry/. This guard keeps that fix from
-silently rebuilding: TextAnalysisRegistry.scala was already at 1135 lines one
-round after the split. When a file trips the limit, split a coherent
-query family out into a new registry file (and wire it into SparkEntry's
-aggregation) instead of raising the limit.
+1. Registry file size: fail when any registry file outgrows 1500 lines.
+   The round-7 merge-conflict problem was a single 4752-line SparkEntry.scala
+   absorbing ~8 new queries per round; the round-8 fix split it into
+   per-family files under src/main/scala/graft/registry/. This guard keeps
+   that fix from silently rebuilding: TextAnalysisRegistry.scala was already
+   at 1135 lines one round after the split. When a file trips the limit,
+   split a coherent query family out into a new registry file (and wire it
+   into SparkEntry's aggregation) instead of raising the limit.
 
-Run as part of the verify recipe. Exit 1 on any violation.
+2. One commit protocol: fail when `Files.createLink` (the atomic
+   create-if-absent commit publish) appears in any src/main file other than
+   graft/lake/Delta.scala. The lake keeps one table format, the Delta log; a
+   second publish site is a second commit protocol growing back (the retired
+   TxTable manifest format was one).
+
+Run from the repo root as part of the verify recipe.
 """
 import sys
 from pathlib import Path
 
 LIMIT = 1500
 REGISTRY = Path("src/main/scala/graft/registry")
+MAIN = Path("src/main/scala")
+PUBLISH = "Files.createLink"
+PUBLISH_HOME = MAIN / "graft/lake/Delta.scala"
 
 
-def main():
+def registry_violations():
     violations = []
     for f in sorted(REGISTRY.glob("*.scala")):
         n = sum(1 for _ in f.open())
@@ -31,9 +41,27 @@ def main():
               "split a query family into a new file instead of growing these:")
         for name, n in violations:
             print(f"  {name}: {n}")
-        return 1
-    print(f"OK: all registry files within {LIMIT} lines")
-    return 0
+    else:
+        print(f"OK: all registry files within {LIMIT} lines")
+    return violations
+
+
+def publish_violations():
+    violations = [f for f in sorted(MAIN.rglob("*.scala"))
+                  if f != PUBLISH_HOME and PUBLISH in f.read_text(errors="replace")]
+    if violations:
+        print(f"FAIL: {PUBLISH} outside {PUBLISH_HOME} — commit through "
+              "graft.lake.DeltaTable instead of a second commit protocol:")
+        for f in violations:
+            print(f"  {f}")
+    else:
+        print(f"OK: {PUBLISH} appears only in {PUBLISH_HOME}")
+    return violations
+
+
+def main():
+    bad = registry_violations() + publish_violations()
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
