@@ -394,16 +394,10 @@ final case class DeltaTable(root: String) {
     // as "no checkpoint here", exactly like a torn multi-part set) —
     // fall back to the next older candidate, then to pure JSON replay.
     val cpCandidates = listCheckpoints().filter(_.version <= target).reverse
-    val sidecarDir = logDir.resolve("_sidecars")
     val cp: Option[(CpRef, Seq[Path])] = cpCandidates.view.map { c =>
       if (!c.v2) Some((c, Seq.empty[Path]))
       else {
-        val mf = parquetCached(spark, Seq(c.parts.head))
-        val sidecars: Seq[Path] =
-          if (!mf.schema.fieldNames.contains("sidecar")) Nil
-          else mf.where(col("sidecar.path").isNotNull)
-            .select(col("sidecar.path")).collect()
-            .map(r => sidecarDir.resolve(r.getString(0))).toSeq
+        val sidecars = sidecarsOf(spark, c.parts.head)
         if (sidecars.forall(Files.exists(_))) Some((c, sidecars)) else None
       }
     }.collectFirst { case Some(r) => r }
@@ -489,10 +483,8 @@ final case class DeltaTable(root: String) {
     val active = mutable.LinkedHashMap.empty[String, AddFile]
     val masked = mutable.HashSet.empty[String]
     val tombstones = mutable.HashMap.empty[String, Long]
-    val mapper = new ObjectMapper
-    commits.foreach { case (_, p) =>
-      Files.readAllLines(p).asScala.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
+    commits.foreach { case (v, _) =>
+      commitActions(v).foreach { node =>
         val add = node.get("add")
         val remove = node.get("remove")
         val meta = node.get("metaData")
@@ -535,11 +527,9 @@ final case class DeltaTable(root: String) {
             if (add.hasNonNull(k)) Some(add.get(k).asLong) else None
           val st = if (add.hasNonNull("stats")) Some(add.get("stats").asText)
                    else None
-          val dv = if (add.hasNonNull("deletionVector"))
-            Some(mapper.writeValueAsString(add.get("deletionVector")))
-          else None
           active(path) = AddFile(path, mapOf(add, "partitionValues"),
-            lng("size"), lng("modificationTime"), st, mapOf(add, "tags"), dv,
+            lng("size"), lng("modificationTime"), st, mapOf(add, "tags"),
+            dvOf(add),
             optLng("baseRowId"), optLng("defaultRowCommitVersion"))
           masked += path
           tombstones.remove(path)
@@ -613,24 +603,12 @@ final case class DeltaTable(root: String) {
     * backlog being drained anyway; `dataChange=false` maintenance
     * counts nothing, matching the CDC feed it meters. */
   def commitSizes(fromExclusive: Long,
-      toInclusive: Long): Seq[(Long, Int, Long)] = {
-    val mapper = new ObjectMapper
+      toInclusive: Long): Seq[(Long, Int, Long)] =
     ((fromExclusive + 1) to toInclusive).map { v =>
-      var n = 0
-      var bytes = 0L
-      Files.readAllLines(commitPath(v)).asScala.filter(_.nonEmpty)
-        .foreach { line =>
-          val node = mapper.readTree(line)
-          val add = node.get("add")
-          if (add != null && add.hasNonNull("path") &&
-              (!add.has("dataChange") || add.get("dataChange").asBoolean)) {
-            n += 1
-            if (add.hasNonNull("size")) bytes += add.get("size").asLong
-          }
-        }
-      (v, n, bytes)
+      val adds = commitActions(v).map(_.get("add")).filter(dataChanging).toSeq
+      (v, adds.size, adds.map(a =>
+        if (a.hasNonNull("size")) a.get("size").asLong else 0L).sum)
     }
-  }
 
   /** Highest committed `txn` version for a writer appId (the protocol's
     * idempotent-write primitive), or None if the writer never committed
@@ -638,6 +616,26 @@ final case class DeltaTable(root: String) {
   def txnVersion(appId: String): Option[Long] =
     if (latestVersion.isEmpty) None
     else logState(SparkSession.active, None).txns.get(appId)
+
+  /** Commit `v`'s actions, one parsed JSON node per non-empty line —
+    * the one reader of the commit-file format. Lazy: a caller that
+    * needs only the leading commitInfo stops parsing there. */
+  private def commitActions(v: Long): Iterator[JsonNode] =
+    Files.readAllLines(commitPath(v)).asScala.iterator.filter(_.nonEmpty)
+      .map(LogJson.readTree)
+
+  /** A data-changing file action: present, with a path, and not marked
+    * `dataChange=false` (the OPTIMIZE rewrites) — what the change feed
+    * and [[commitSizes]] count. */
+  private def dataChanging(n: JsonNode): Boolean =
+    n != null && n.hasNonNull("path") &&
+      (!n.has("dataChange") || n.get("dataChange").asBoolean)
+
+  /** An add/remove action's deletion-vector descriptor, as JSON. */
+  private def dvOf(n: JsonNode): Option[String] =
+    if (n.hasNonNull("deletionVector"))
+      Some(LogJson.writeValueAsString(n.get("deletionVector")))
+    else None
 
   private def mapOf(node: JsonNode, field: String): Map[String, String] = {
     val m = node.get(field)
@@ -862,9 +860,14 @@ final case class DeltaTable(root: String) {
     (emptied, descs)
   }
 
-  /** Live file PATHS only — what a full-table multi-path scan minimally
-    * needs on the driver; the stats JSON never rides along (the census
-    * stays a DataFrame and only the single `path` column is collected —
+  /** (path, deletionVector descriptor, partitionValues) triples — what
+    * a full-table scan minimally needs: the path strings plus, for the
+    * (few, boundary-delete-produced) DV-bearing files, a ~100-byte
+    * descriptor; on PARTITIONED tables the per-file partitionValues map
+    * rides too (the same strings Spark's own InMemoryFileIndex holds
+    * per file — needed so absolute-path clone adds recover partition
+    * columns from the actions). The stats JSON never rides along (the
+    * census stays a DataFrame and only these columns are collected —
     * [[livePathsFrame]] is that projection, spec-asserted).
     *
     * DOCUMENTED DRIVER BOUND, O(live files) path strings: this is the
@@ -879,21 +882,20 @@ final case class DeltaTable(root: String) {
     * maintenance fix).
     * Stats-bearing columns would multiply that by 10-100×, which is why
     * they are projected away HERE, not downstream. */
-  private def livePaths(spark: SparkSession, st: LogState): Seq[String] =
-    livePathDvs(spark, st).map(_._1)
+  private def livePathDvs(spark: SparkSession,
+      st: LogState): Seq[(String, Option[String], Map[String, String])] =
+    livePathsFrame(spark, st).collect().toSeq.map { r =>
+      (r.getString(0), Option(r.getString(1)),
+        if (r.length < 3 || r.isNullAt(2)) Map.empty[String, String]
+        else r.getMap[String, String](2).toMap)
+    }
 
-  /** (path, deletionVector descriptor, partitionValues) triples — what
-    * a full-table scan minimally needs: the path strings plus, for the
-    * (few, boundary-delete-produced) DV-bearing files, a ~100-byte
-    * descriptor; on PARTITIONED tables the per-file partitionValues map
-    * rides too (the same strings Spark's own InMemoryFileIndex holds
-    * per file — needed so absolute-path clone adds recover partition
-    * columns from the actions). */
-  /** Census collect for the PRESERVING maintenance verbs (enabled
-    * rowTracking): like [[livePathDvs]] but keeping each file's
-    * baseRowId/defaultRowCommitVersion lineage — stats and tags are
-    * dropped before the collect, so the driver holds paths plus two
-    * longs per file, never the skipping index. */
+  /** Census collect for the whole-table OPTIMIZE verbs and
+    * [[readWithRowLineage]]: like [[livePathDvs]] but keeping each
+    * file's baseRowId/defaultRowCommitVersion lineage, so ONE collect
+    * serves both the plain and the lineage-preserving read — stats and
+    * tags are dropped before the collect, so the driver holds paths
+    * plus two longs per file, never the skipping index. */
   private def liveAddsLineage(spark: SparkSession,
       st: LogState): Seq[AddFile] =
     fileCensus(spark, st).select(col("path"), col("partitionValues"),
@@ -916,14 +918,6 @@ final case class DeltaTable(root: String) {
     else {
       val (s, i, v) = ensureMaterializedRowTracking(spark, st)
       (s, Seq(i, v))
-    }
-
-  private def livePathDvs(spark: SparkSession,
-      st: LogState): Seq[(String, Option[String], Map[String, String])] =
-    livePathsFrame(spark, st).collect().toSeq.map { r =>
-      (r.getString(0), Option(r.getString(1)),
-        if (r.length < 3 || r.isNullAt(2)) Map.empty[String, String]
-        else r.getMap[String, String](2).toMap)
     }
 
   /** The exact frame [[livePathDvs]] collects — package-visible so the
@@ -1247,39 +1241,40 @@ final case class DeltaTable(root: String) {
   // ---- read side --------------------------------------------------------
 
   /** Latest committed version whose commit timestamp is ≤ `ts` — the
-    * Delta `timestampAsOf` contract. Timestamps come from each commit's
-    * `commitInfo.timestamp` (the commit file's modification time is the
-    * protocol's own fallback for logs that omit it), adjusted to be
-    * monotonically non-decreasing exactly as Delta does (a clock-skewed
-    * commit inherits its predecessor's timestamp), so the answer is
+    * Delta `timestampAsOf` contract. Timestamps follow [[commitTime]]
+    * (inCommitTimestamp, then `commitInfo.timestamp`, then the commit
+    * file's modification time), adjusted to be monotonically
+    * non-decreasing ([[monotonicTimes]]), so the answer is
     * unambiguous. O(log) driver work — commit files are a bounded
     * metadata plane. Fails loudly when `ts` predates the first commit. */
   def versionAt(ts: Long): Long = {
-    val mapper = new ObjectMapper
-    val raw = listLog(".json").map { case (v, p) =>
-      // inCommitTimestamp (the ICT writer feature) supersedes
-      // commitInfo.timestamp when present, per the protocol — it is the
-      // authoritative commit time on enabled tables
-      val ci = Files.readAllLines(p).asScala.view.filter(_.nonEmpty)
-        .map(mapper.readTree).map(_.get("commitInfo"))
-        .collectFirst {
-          case n if n != null && (n.hasNonNull("inCommitTimestamp") ||
-              n.hasNonNull("timestamp")) =>
-            if (n.hasNonNull("inCommitTimestamp"))
-              n.get("inCommitTimestamp").asLong
-            else n.get("timestamp").asLong
-        }
-      v -> ci.getOrElse(Files.getLastModifiedTime(p).toMillis)
-    }
-    require(raw.nonEmpty, s"DeltaTable $root: no _delta_log commits")
-    val monotonic = raw.tail.scanLeft(raw.head) { case ((_, prev), (v, t)) =>
-      v -> math.max(prev, t)
-    }
+    val versions = listLog(".json").map(_._1)
+    require(versions.nonEmpty, s"DeltaTable $root: no _delta_log commits")
+    val monotonic = versions.zip(monotonicTimes(versions.map(commitTimeOf)))
     val at = monotonic.takeWhile(_._2 <= ts).lastOption
     at.map(_._1).getOrElse(throw new IllegalArgumentException(
       s"DeltaTable $root: timestamp $ts predates the first commit " +
         s"(${monotonic.head._2})"))
   }
+
+  /** Commit `v`'s time, the protocol's rule: its commitInfo's
+    * `inCommitTimestamp` (the ICT writer feature — authoritative on
+    * enabled tables) over `timestamp`, else the commit file's
+    * modification time. */
+  private def commitTime(v: Long, commitInfo: Option[JsonNode]): Long =
+    commitInfo.flatMap(ci => Seq("inCommitTimestamp", "timestamp")
+        .find(ci.hasNonNull).map(ci.get(_).asLong))
+      .getOrElse(Files.getLastModifiedTime(commitPath(v)).toMillis)
+
+  /** [[commitTime]] of commit `v`, parsed only up to its commitInfo. */
+  private def commitTimeOf(v: Long): Long =
+    commitTime(v, commitActions(v).map(_.get("commitInfo")).find(_ != null))
+
+  /** Commit times in version order, adjusted to be monotonically
+    * non-decreasing exactly as Delta does: a clock-skewed commit
+    * inherits its predecessor's timestamp. */
+  private def monotonicTimes(times: Seq[Long]): Seq[Long] =
+    times.scanLeft(Long.MinValue)(math.max).tail
 
   /** [[read]] at the snapshot current as of wall-clock `ts`
     * (timestampAsOf time travel). */
@@ -1294,42 +1289,26 @@ final case class DeltaTable(root: String) {
     * metadata plane; the row set is version-count-sized, returned as a
     * DataFrame so it composes with filters/joins like any table. */
   def history(spark: SparkSession): DataFrame = {
-    val mapper = new ObjectMapper
-    val raw = listLog(".json").map { case (v, p) =>
-      var ts = 0L
-      var op = ""
-      var params = Map.empty[String, String]
+    val raw = listLog(".json").map { case (v, _) =>
+      var ci: Option[JsonNode] = None
       var adds = 0L
       var removes = 0L
-      Files.readAllLines(p).asScala.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        val ci = node.get("commitInfo")
-        if (ci != null) {
-          // inCommitTimestamp supersedes timestamp, as in [[versionAt]]
-          if (ci.hasNonNull("timestamp")) ts = ci.get("timestamp").asLong
-          if (ci.hasNonNull("inCommitTimestamp"))
-            ts = ci.get("inCommitTimestamp").asLong
-          if (ci.hasNonNull("operation")) op = ci.get("operation").asText
-          val pn = ci.get("operationParameters")
-          if (pn != null && !pn.isNull)
-            params = pn.properties.asScala
-              .map(e => e.getKey -> e.getValue.asText).toMap
-        }
+      commitActions(v).foreach { node =>
+        Option(node.get("commitInfo")).foreach(n => ci = Some(n))
         if (node.has("add")) adds += 1
         if (node.has("remove")) removes += 1
       }
-      if (ts == 0L) ts = Files.getLastModifiedTime(p).toMillis
-      (v, ts, op, params, adds, removes)
-    }
-    val monotonic = raw.foldLeft(Vector.empty[(Long, Long, String,
-        Map[String, String], Long, Long)]) { (acc, r) =>
-      val adj = acc.lastOption.map(prev => math.max(prev._2, r._2))
-        .getOrElse(r._2)
-      acc :+ r.copy(_2 = adj)
+      val op = ci.filter(_.hasNonNull("operation"))
+        .map(_.get("operation").asText).getOrElse("")
+      (v, commitTime(v, ci), op,
+        ci.map(mapOf(_, "operationParameters")).getOrElse(Map.empty), adds,
+        removes)
     }
     import spark.implicits._
-    monotonic.reverse.toDF("version", "timestamp", "operation",
-      "operationParameters", "n_adds", "n_removes")
+    raw.zip(monotonicTimes(raw.map(_._2)))
+      .map { case (r, ts) => r.copy(_2 = ts) }.reverse
+      .toDF("version", "timestamp", "operation", "operationParameters",
+        "n_adds", "n_removes")
   }
 
   /** Read the table at `version` (default: latest). Output columns are
@@ -1389,42 +1368,40 @@ final case class DeltaTable(root: String) {
       mode: String = "none"): DataFrame = {
     if (files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val absRoot = Paths.get(root).toAbsolutePath.toString
-    def phys(n: String): String = {
-      val f = schema(n)
-      if (f.metadata.contains(DeltaTable.PhysNameKey))
-        f.metadata.getString(DeltaTable.PhysNameKey)
-      else n
-    }
     val dvFiles = files.collect { case (p, Some(json), _) => (p, json) }
     // the DV-free fast path never materializes the metadata columns
     val raw = scanFiles(spark, schema, partitionColumns, mode,
       files.map(f => (f._1, f._3)), withMeta = dvFiles.nonEmpty)
-    val live =
-      if (dvFiles.isEmpty) raw
-      else {
-        val dvRows = dvFiles.flatMap { case (rel, json) =>
-          // join key via the SAME canonicalization the scan's metadata
-          // column goes through (see metaPath) — a plain path string
-          // diverges on percent/space/non-ASCII names and would
-          // silently resurrect DV-deleted rows
-          val abs = metaPath(absRoot, rel)
-          DeletionVectors.read(root, DeletionVectors.fromJson(json))
-            .map(ri => Row(abs, ri))
-        }
-        val dvDF = spark.createDataFrame(dvRows.asJava, StructType(Seq(
-          StructField("_dv_file", StringType), StructField("_dv_row", LongType))))
-        raw.join(broadcast(dvDF),
-          col("_g_fp") === col("_dv_file") && col("_g_ri") === col("_dv_row"),
-          "left_anti")
-      }
     // serve the DECLARED schema including field metadata (column-mapping
     // physicalName/id ride along, as delta-spark's reads do) — rewrite
     // verbs re-commit these frames, and the metadata is what lets commit
     // prove "schema unchanged" and re-emit physical names
-    live.select(schema.map(f =>
-      col(phys(f.name)).cast(f.dataType).as(f.name, f.metadata)): _*)
+    dropDeleted(spark, raw, dvFiles).select(schema.map(f =>
+      col(physName(schema, f.name)).cast(f.dataType).as(f.name, f.metadata)): _*)
   }
+
+  /** `raw` (a [[scanFiles]] frame with `_g_fp`/`_g_ri`) minus the rows
+    * the `(path, descriptor)` deletion vectors delete — a broadcast
+    * anti-join on (file, row index). The file key goes through the SAME
+    * canonicalization the scan's metadata column does ([[metaPath]]): a
+    * plain path string diverges on percent/space/non-ASCII names and
+    * would silently resurrect DV-deleted rows. No DVs, no join. */
+  private def dropDeleted(spark: SparkSession, raw: DataFrame,
+      dvFiles: Seq[(String, String)]): DataFrame =
+    if (dvFiles.isEmpty) raw
+    else {
+      val absRoot = Paths.get(root).toAbsolutePath.toString
+      val dvRows = dvFiles.flatMap { case (rel, json) =>
+        val abs = metaPath(absRoot, rel)
+        DeletionVectors.read(root, DeletionVectors.fromJson(json))
+          .map(ri => Row(abs, ri))
+      }
+      val dvDF = spark.createDataFrame(dvRows.asJava, StructType(Seq(
+        StructField("_dv_file", StringType), StructField("_dv_row", LongType))))
+      raw.join(broadcast(dvDF),
+        col("_g_fp") === col("_dv_file") && col("_g_ri") === col("_dv_row"),
+        "left_anti")
+    }
 
   /** [[readFilesDv]] plus per-row ROW-TRACKING LINEAGE (the enabled
     * state's read rule, public protocol): serves the logical schema
@@ -1446,26 +1423,11 @@ final case class DeltaTable(root: String) {
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
     val absRoot = Paths.get(root).toAbsolutePath.toString
     val dvFiles = files.flatMap(f => f.dv.map(d => (f.path, d)))
-    val raw = scanFiles(spark, st.schema, st.partitionColumns,
-      st.columnMappingMode, files.map(f => (f.path, f.partitionValues)),
-      withMeta = true,
+    val live = dropDeleted(spark, scanFiles(spark, st.schema,
+      st.partitionColumns, st.columnMappingMode,
+      files.map(f => (f.path, f.partitionValues)), withMeta = true,
       extraFields = Seq(StructField(matId, LongType),
-        StructField(matVer, LongType)))
-    val live =
-      if (dvFiles.isEmpty) raw
-      else {
-        val dvRows = dvFiles.flatMap { case (rel, json) =>
-          val abs = metaPath(absRoot, rel)
-          DeletionVectors.read(root, DeletionVectors.fromJson(json))
-            .map(ri => Row(abs, ri))
-        }
-        val dvDF = spark.createDataFrame(dvRows.asJava, StructType(Seq(
-          StructField("_dv_file", StringType),
-          StructField("_dv_row", LongType))))
-        raw.join(broadcast(dvDF),
-          col("_g_fp") === col("_dv_file") && col("_g_ri") === col("_dv_row"),
-          "left_anti")
-      }
+        StructField(matVer, LongType))), dvFiles)
     // per-file lineage defaults ride a broadcast map on the SAME
     // canonicalized path key the DV join uses
     val lineage: Seq[Row] = files.map(f => Row(metaPath(absRoot, f.path),
@@ -1549,12 +1511,7 @@ final case class DeltaTable(root: String) {
       // schema verbatim — files lacking them serve nulls
       extraFields: Seq[StructField] = Nil): DataFrame = {
     val absRoot = Paths.get(root).toAbsolutePath.toString
-    def phys(n: String): String = {
-      val f = schema(n)
-      if (f.metadata.contains(DeltaTable.PhysNameKey))
-        f.metadata.getString(DeltaTable.PhysNameKey)
-      else n
-    }
+    def phys(n: String): String = physName(schema, n)
     val dataSchema = StructType(
       schema.filterNot(f => partitionColumns.contains(f.name))
         .map(f => DeltaTable.physicalField(f, byId = mode == "id"))
@@ -1698,42 +1655,26 @@ final case class DeltaTable(root: String) {
     * the data — removes + adds carry `dataChange=false`, so CDC
     * consumers ([[changes]]) skip the rewrite entirely, exactly as the
     * protocol prescribes. This is the WHOLE-TABLE form (one commit, one
-    * full rewrite) — right for small-to-medium tables; at the 100 TB
-    * target use [[compactIncremental]], which converges over size-capped
-    * batches without ever holding the table in one commit. */
-  def compact(numFiles: Int = 1): Long = {
-    val spark = SparkSession.active
-    val (st, matCols) = preserveCols(spark, logState(spark, None))
-    // whole-table maintenance verb: full (path, dv) collect, documented
-    val files = livePathDvs(spark, st)
-    // enabled rowTracking: ids and commit versions of the moved rows
-    // ride the rewrite in the materialized columns — unmodified rows
-    // keep BOTH (OPTIMIZE changes nothing, per the protocol)
-    val current = matCols match {
-      case Seq(i, vv) => toMaterialized(readFilesDvPreserve(spark, st,
-        liveAddsLineage(spark, st), i, vv), i, vv)
-      case _ => readFilesDv(spark, st.schema, st.partitionColumns, files,
-        st.columnMappingMode)
-    }
-    val compacted =
-      if (st.partitionColumns.isEmpty) current.repartition(numFiles)
-      else current.repartition(numFiles, st.partitionColumns.map(col): _*)
-    // DVs are PURGED by the physical rewrite (deleted rows are dropped
-    // for real), so the logical snapshot is unchanged: dataChange=false
-    // stays correct and the new adds carry no descriptor
-    commit(compacted, st.partitionColumns, files.map(_._1), "OPTIMIZE",
-      Map.empty, dataChange = false,
-      removeDvs = files.collect { case (p, Some(d), _) => p -> d }.toMap,
-      materializedCols = matCols)
-  }
+    * full rewrite through [[optimizeRewrite]]) — right for
+    * small-to-medium tables; at the 100 TB target use
+    * [[compactIncremental]], which converges over size-capped batches
+    * without ever holding the table in one commit. */
+  def compact(numFiles: Int = 1): Long =
+    optimizeRewrite(logState(SparkSession.active, None)) { st =>
+      // whole-table maintenance verb: full census collect, documented
+      Some(OptimizeBatch(liveAddsLineage(SparkSession.active, st), Map.empty,
+        df => if (st.partitionColumns.isEmpty) df.repartition(numFiles)
+              else df.repartition(numFiles, st.partitionColumns.map(col): _*)))
+    }.get
 
   /** ONE size-capped OPTIMIZE step — the maintenance shape that
     * actually runs at 100 TB, where [[compact]]'s rewrite-the-world
     * commit cannot: pick the first partition-value group holding ≥ 2
     * files smaller than `smallBytes`, take a batch capped by
     * `maxBatchBytes`/`maxBatchFiles` (always ≥ 2 so every commit makes
-    * progress), rewrite JUST that batch in a `dataChange=false` commit
-    * (CDC-silent, snapshot-identical), and return its version — or None
+    * progress), rewrite JUST that batch into one file through
+    * [[optimizeRewrite]] (a `dataChange=false` commit: CDC-silent,
+    * snapshot-identical), and return its version — or None
     * when CONVERGED (no group has 2 small files left). Repeated calls
     * strictly shrink the small-file count, so a periodic maintenance
     * job folds a streaming-ingested table into scan-sized files a few
@@ -1747,28 +1688,62 @@ final case class DeltaTable(root: String) {
     require(maxBatchFiles >= 2,
       s"compactIncremental maxBatchFiles $maxBatchFiles < 2 cannot converge")
     val spark = SparkSession.active
-    val (st, matCols) = preserveCols(spark, logState(spark, None))
-    val small = collectAdds(
-      fileCensus(spark, st).where(col("size") < smallBytes))
-    val group = small.groupBy(_.partitionValues).values
-      .filter(_.size >= 2).minByOption(_.map(_.path).min)
-    group.map { files =>
-      val sorted = files.sortBy(_.path)
-      // soft caps: the first 2 files always ride (else no progress)
-      val capped = takeCapped(sorted, minFiles = 2, maxBatchBytes,
-        maxBatchFiles)
-      val rewritten = (matCols match {
-        case Seq(i, vv) => toMaterialized(
-          readFilesDvPreserve(spark, st, capped, i, vv), i, vv)
-        case _ => readFilesDv(spark, st.schema, st.partitionColumns,
-          dvPairs(capped), st.columnMappingMode)
-      }).repartition(1)
-      commit(rewritten, st.partitionColumns, capped.map(_.path), "OPTIMIZE",
-        Map("batchFiles" -> capped.size.toString, "incremental" -> "true"),
-        dataChange = false, statsFor = statsFor, removeDvs = dvMapOf(capped),
-        materializedCols = matCols)
+    optimizeRewrite(logState(spark, None)) { st =>
+      val small = collectAdds(
+        fileCensus(spark, st).where(col("size") < smallBytes))
+      small.groupBy(_.partitionValues).values
+        .filter(_.size >= 2).minByOption(_.map(_.path).min).map { files =>
+          // soft caps: the first 2 files always ride (else no progress)
+          val capped = takeCapped(files.sortBy(_.path), minFiles = 2,
+            maxBatchBytes, maxBatchFiles)
+          OptimizeBatch(capped, incrementalParams(capped), _.repartition(1),
+            statsFor)
+        }
     }
   }
+
+  /** One OPTIMIZE batch: the files to rewrite, the commit's
+    * `operationParameters`, the layout that shapes their rows into the
+    * output files, the columns to collect fresh stats on, and whether
+    * the adds open a new z-cube ([[DeltaTable.ZCubeTag]]). */
+  private final case class OptimizeBatch(files: Seq[AddFile],
+      params: Map[String, String], layout: DataFrame => DataFrame,
+      statsFor: Seq[String] = Nil, zCube: Boolean = false)
+
+  /** The one OPTIMIZE rewrite core every compaction / z-order /
+    * reclustering verb runs: resolve the enabled-rowTracking
+    * materialized columns ([[preserveCols]]), let `pick` choose the
+    * batch from that snapshot (None: nothing to do), read the batch —
+    * with row lineage on enabled tables, so ids and commit versions of
+    * the moved rows ride the materialized columns (OPTIMIZE changes
+    * nothing, per the protocol) — lay it out, and commit the rewrite
+    * with `dataChange=false`. DVs are PURGED by the physical rewrite
+    * (deleted rows are dropped for real), so the logical snapshot is
+    * unchanged: each remove carries its file's descriptor and the new
+    * adds carry none. */
+  private def optimizeRewrite(st0: LogState, reclusterOk: Boolean = false)(
+      pick: LogState => Option[OptimizeBatch]): Option[Long] = {
+    val spark = SparkSession.active
+    val (st, matCols) = preserveCols(spark, st0)
+    pick(st).map { b =>
+      val frame = matCols match {
+        case Seq(i, vv) => toMaterialized(
+          readFilesDvPreserve(spark, st, b.files, i, vv), i, vv)
+        case _ => readFilesDv(spark, st.schema, st.partitionColumns,
+          dvPairs(b.files), st.columnMappingMode)
+      }
+      commit(b.layout(frame), st.partitionColumns, b.files.map(_.path),
+        "OPTIMIZE", b.params, dataChange = false, statsFor = b.statsFor,
+        tags = if (b.zCube) Map(ZCubeTag -> java.util.UUID.randomUUID.toString)
+               else Map.empty,
+        removeDvs = dvMapOf(b.files), materializedCols = matCols,
+        reclusterOk = reclusterOk)
+    }
+  }
+
+  /** `operationParameters` every incremental OPTIMIZE step records. */
+  private def incrementalParams(batch: Seq[AddFile]): Map[String, String] =
+    Map("batchFiles" -> batch.size.toString, "incremental" -> "true")
 
   /** Ordered prefix of `sorted` capped by bytes/files, but never fewer
     * than `minFiles` (the per-commit progress guarantee both
@@ -2021,18 +1996,17 @@ final case class DeltaTable(root: String) {
     val physPartitionBy = partitionBy.map(toPhys)
 
     val token = java.util.UUID.randomUUID.toString.take(8)
-    val scratch = Paths.get(root, s".tmp-delta-$token")
 
-    // Stage a frame's part files into root/<sub>, keeping the Hive
-    // partition dirs — returns (relative path, size, partitionValues).
-    // Shared by the data write and the _change_data (CDC) write.
+    // Stage a frame's part files into root/<sub> through the commit's
+    // scratch directory ([[viaScratch]]), keeping the Hive partition
+    // dirs — returns (relative path, size, partitionValues). Shared by
+    // the data write and the _change_data (CDC) write.
     var staged = 0
     def stageParts(frame: DataFrame, prefix: String,
         sub: Option[String]): Seq[(String, Long, Map[String, String])] = {
       val out = mutable.ArrayBuffer.empty[(String, Long, Map[String, String])]
       val writer = if (physPartitionBy.isEmpty) frame.write
                    else frame.write.partitionBy(physPartitionBy: _*)
-      writer.mode("overwrite").parquet(scratch.toString)
       def walk(dir: Path, rel: List[String], pv: Map[String, String]): Unit =
         Files.list(dir).iterator.asScala.toSeq.sortBy(_.toString).foreach { p =>
           val name = p.getFileName.toString
@@ -2051,21 +2025,22 @@ final case class DeltaTable(root: String) {
             out += ((relPath, Files.size(dest), pv))
           }
         }
-      walk(scratch, Nil, Map.empty)
-      deleteRecursively(scratch)
-      out.toSeq
+      viaScratch(Paths.get(root, s".tmp-delta-$token"))(
+        writer.mode("overwrite").parquet(_)) { dir =>
+        walk(dir, Nil, Map.empty)
+        out.toSeq
+      }
     }
 
     // move parts into the table root, keeping the Hive partition dirs.
     // writeData=false is the metadata-only commit shape (DV deletes:
     // removes + descriptor re-adds, no new data) — even an EMPTY frame
     // writes a footer-only part file Spark would then dutifully add.
-    // a failed staging job (e.g. a row-contract raise_error) must not
-    // leave scratch files behind — the commit throws, nothing publishes
+    // a failed staging job (e.g. a row-contract raise_error) leaves no
+    // scratch files behind — the commit throws, nothing publishes
     val moved: Seq[(String, Long, Map[String, String])] =
       if (!writeData) Nil
-      else try stageParts(toPhysFrame(df, materializedCols), "part", None)
-      catch { case t: Throwable => deleteRecursively(scratch); throw t }
+      else stageParts(toPhysFrame(df, materializedCols), "part", None)
 
     // Per-file stats for the data-skipping index: ONE map-side-combined
     // aggregate over the JUST-WRITTEN files (O(new data), grouped by
@@ -2200,20 +2175,8 @@ final case class DeltaTable(root: String) {
     val now = System.currentTimeMillis
     val actions = mutable.ArrayBuffer.empty[String]
 
-    val ci = mapper.createObjectNode
-    ci.put("timestamp", now).put("operation", op)
-    // in-commit timestamps (the inCommitTimestamp writer feature): an
-    // enabled table's every commit carries a MONOTONIC inCommitTimestamp
-    // that timestamp time travel prefers over commitInfo.timestamp/file
-    // mtimes — clock skew and log-file copies cannot reorder history
-    if (newConfiguration.get("delta.enableInCommitTimestamps")
-        .contains("true")) {
-      val prev = if (v == 0L) 0L else lastInCommitTimestamp(v - 1)
-      ci.put("inCommitTimestamp", math.max(now, prev + 1))
-    }
-    val params = ci.putObject("operationParameters")
-    opParams.foreach { case (k, x) => params.put(k, x) }
-    actions += wrap(mapper, "commitInfo", ci)
+    actions += commitInfoAction(op, opParams, now,
+      inCommitTimestamp(newConfiguration, now, Some(v - 1).filter(_ >= 0)))
 
     // Type-gated table features (reader AND writer, per the protocol):
     // TIMESTAMP_NTZ columns require timestampNtz, VARIANT columns
@@ -2239,18 +2202,8 @@ final case class DeltaTable(root: String) {
         !(s.minReader >= 3 && s.readerFeatures.contains(f))))
     if (typeFeatures.nonEmpty) {
       val (rf, wf) = upgradeFeatureLists(currentState, typeFeatures: _*)
-      val proto = mapper.createObjectNode
-      proto.put("minReaderVersion", 3).put("minWriterVersion", 7)
-      val rfArr = proto.putArray("readerFeatures")
-      rf.foreach(rfArr.add)
-      val wfArr = proto.putArray("writerFeatures")
-      wf.foreach(wfArr.add)
-      actions += wrap(mapper, "protocol", proto)
-    } else if (v == 0L) {
-      val proto = mapper.createObjectNode
-      proto.put("minReaderVersion", 1).put("minWriterVersion", 2)
-      actions += wrap(mapper, "protocol", proto)
-    }
+      actions += protocolAction(3, 7, Some(rf), Some(wf))
+    } else if (v == 0L) actions += protocolAction(1, 2)
     // DV re-adds require the deletionVectors table feature: upgrade the
     // protocol in the SAME commit that introduces the first descriptor.
     // Per the protocol's table-features contract, upgrading to
@@ -2262,13 +2215,7 @@ final case class DeltaTable(root: String) {
     if (dvReAdds.nonEmpty && currentState.forall(s =>
         s.minReader < 3 || !s.readerFeatures.contains("deletionVectors"))) {
       val (rf, wf) = upgradeFeatureLists(currentState, "deletionVectors")
-      val proto = mapper.createObjectNode
-      proto.put("minReaderVersion", 3).put("minWriterVersion", 7)
-      val rfArr = proto.putArray("readerFeatures")
-      rf.foreach(rfArr.add)
-      val wfArr = proto.putArray("writerFeatures")
-      wf.foreach(wfArr.add)
-      actions += wrap(mapper, "protocol", proto)
+      actions += protocolAction(3, 7, Some(rf), Some(wf))
     }
     // a fresh metaData action rides the commit only when the schema or
     // the partitioning actually changed (plus v0) — re-recording an
@@ -2295,15 +2242,8 @@ final case class DeltaTable(root: String) {
       c.put("size", size).put("dataChange", false)
       actions += wrap(mapper, "cdc", c)
     }
-    removePaths.foreach { p =>
-      val rm = mapper.createObjectNode
-      rm.put("path", encodePath(p)).put("deletionTimestamp", now)
-        .put("dataChange", dataChange)
-      removeDvs.get(p).foreach(dvJson =>
-        rm.set[ObjectNode]("deletionVector",
-          mapper.readTree(dvJson).asInstanceOf[ObjectNode]))
-      actions += wrap(mapper, "remove", rm)
-    }
+    removePaths.foreach(p =>
+      actions += removeAction(p, now, dataChange, removeDvs.get(p)))
     moved.foreach { case (path, size, pv) =>
       val add = mapper.createObjectNode
       add.put("path", encodePath(path))
@@ -2335,15 +2275,8 @@ final case class DeltaTable(root: String) {
     // the remove, for CDC) then re-add the SAME path with the merged
     // deletionVector — the file's bytes are untouched
     dvReAdds.foreach { case (f, d) =>
-      val rm = mapper.createObjectNode
-      rm.put("path", encodePath(f.path)).put("deletionTimestamp", now)
-        .put("dataChange", dataChange)
-      f.dv.foreach(j => rm.set[ObjectNode]("deletionVector",
-        mapper.readTree(j).asInstanceOf[ObjectNode]))
-      f.baseRowId.foreach(b => rm.put("baseRowId", b))
-      f.defaultRowCommitVersion.foreach(c =>
-        rm.put("defaultRowCommitVersion", c))
-      actions += wrap(mapper, "remove", rm)
+      actions += removeAction(f.path, now, dataChange, f.dv, f.baseRowId,
+        f.defaultRowCommitVersion)
       val add = mapper.createObjectNode
       add.put("path", encodePath(f.path))
       val pvNode = add.putObject("partitionValues")
@@ -2743,16 +2676,10 @@ final case class DeltaTable(root: String) {
     val now = System.currentTimeMillis
     val actions = mutable.ArrayBuffer.empty[String]
     val ictOn = conf.get("delta.enableInCommitTimestamps").contains("true")
-    val ci = mapper.createObjectNode
-    ci.put("timestamp", now).put("operation", "SET TBLPROPERTIES")
     // enabling in-commit timestamps makes THIS commit the first to
     // carry one (the config is active as of this version)
-    if (ictOn)
-      ci.put("inCommitTimestamp",
-        math.max(now, lastInCommitTimestamp(st.version) + 1))
-    val pn = ci.putObject("operationParameters")
-    props.toSeq.sortBy(_._1).foreach { case (k, x) => pn.put(k, x) }
-    actions += wrap(mapper, "commitInfo", ci)
+    actions += commitInfoAction("SET TBLPROPERTIES", props, now,
+      inCommitTimestamp(conf, now, Some(st.version)))
     // activation upgrades the protocol to the declaring tier, per the
     // protocol's rule: CHECK constraints → minWriter 3, CDF →
     // minWriter 4; inCommitTimestamp exists only as an EXPLICIT v7
@@ -2767,39 +2694,19 @@ final case class DeltaTable(root: String) {
     val v7Only: Set[String] = if (ictOn) Set("inCommitTimestamp") else Set.empty
     if (st.minWriter >= 7) {
       val missing = (activated.map(_._2).toSet ++ v7Only) -- st.writerFeatures
-      if (missing.nonEmpty) {
-        val proto = mapper.createObjectNode
-        proto.put("minReaderVersion", st.minReader)
-          .put("minWriterVersion", 7)
-        if (st.minReader >= 3) {
-          val rfArr = proto.putArray("readerFeatures")
-          st.readerFeatures.toSeq.sorted.foreach(rfArr.add)
-        }
-        val wfArr = proto.putArray("writerFeatures")
-        (st.writerFeatures ++ missing).toSeq.sorted.foreach(wfArr.add)
-        actions += wrap(mapper, "protocol", proto)
-      }
+      if (missing.nonEmpty)
+        actions += protocolAction(st.minReader, 7,
+          Some(st.readerFeatures).filter(_ => st.minReader >= 3),
+          Some(st.writerFeatures ++ missing))
     } else if (v7Only.nonEmpty) {
-      val wf = legacyWriterFeatures(st.minWriter) ++
-        activated.map(_._2) ++ v7Only
-      val proto = mapper.createObjectNode
-      proto.put("minReaderVersion", st.minReader)
-        .put("minWriterVersion", 7)
-      if (st.minReader >= 3) {
-        val rfArr = proto.putArray("readerFeatures")
-        (st.readerFeatures ++ legacyReaderFeatures(st.minReader))
-          .toSeq.sorted.foreach(rfArr.add)
-      }
-      val wfArr = proto.putArray("writerFeatures")
-      wf.toSeq.sorted.foreach(wfArr.add)
-      actions += wrap(mapper, "protocol", proto)
+      actions += protocolAction(st.minReader, 7,
+        Some(st.readerFeatures ++ legacyReaderFeatures(st.minReader))
+          .filter(_ => st.minReader >= 3),
+        Some(legacyWriterFeatures(st.minWriter) ++ activated.map(_._2) ++
+          v7Only))
     } else if (activated.nonEmpty &&
-        activated.map(_._1).max > st.minWriter) {
-      val proto = mapper.createObjectNode
-      proto.put("minReaderVersion", st.minReader)
-        .put("minWriterVersion", activated.map(_._1).max)
-      actions += wrap(mapper, "protocol", proto)
-    }
+        activated.map(_._1).max > st.minWriter)
+      actions += protocolAction(st.minReader, activated.map(_._1).max)
     actions += wrap(mapper, "metaData",
       metaNode(mapper, st.schema, st.partitionColumns, now, conf, st.tableId))
     val v = st.version + 1
@@ -2915,15 +2822,8 @@ final case class DeltaTable(root: String) {
     val mapper = new ObjectMapper
     val now = System.currentTimeMillis
     val actions = mutable.ArrayBuffer.empty[String]
-    val ci = mapper.createObjectNode
-    ci.put("timestamp", now).put("operation", op)
-    if (st.configuration.get("delta.enableInCommitTimestamps")
-        .contains("true"))
-      ci.put("inCommitTimestamp",
-        math.max(now, lastInCommitTimestamp(st.version) + 1))
-    val pn = ci.putObject("operationParameters")
-    params.toSeq.sortBy(_._1).foreach { case (k, x) => pn.put(k, x) }
-    actions += wrap(mapper, "commitInfo", ci)
+    actions += commitInfoAction(op, params, now,
+      inCommitTimestamp(st.configuration, now, Some(st.version)))
     actions += wrap(mapper, "metaData", metaNode(mapper, newSchema,
       newPartitionColumns, now, st.configuration, st.tableId))
     val v = st.version + 1
@@ -2931,19 +2831,64 @@ final case class DeltaTable(root: String) {
     v
   }
 
-  /** The previous commit's inCommitTimestamp (0 when it predates
-    * enablement or the commit file is gone) — one driver-side read of a
-    * single bounded metadata file, for the monotonicity guarantee. */
-  private def lastInCommitTimestamp(v: Long): Long = {
-    val p = commitPath(v)
-    if (!Files.exists(p)) return 0L
-    val mapper = new ObjectMapper
-    Files.readAllLines(p).asScala.view.filter(_.nonEmpty)
-      .map(mapper.readTree).map(_.get("commitInfo"))
-      .collectFirst {
-        case n if n != null && n.hasNonNull("inCommitTimestamp") =>
-          n.get("inCommitTimestamp").asLong
-      }.getOrElse(0L)
+  /** One `commitInfo` action line: wall-clock `timestamp`, operation,
+    * `operationParameters` (keys sorted) and, when given, the
+    * inCommitTimestamp. */
+  private def commitInfoAction(op: String, params: Map[String, String],
+      now: Long, ict: Option[Long]): String = {
+    val ci = LogJson.createObjectNode
+    ci.put("timestamp", now).put("operation", op)
+    ict.foreach(t => ci.put("inCommitTimestamp", t))
+    val pn = ci.putObject("operationParameters")
+    params.toSeq.sortBy(_._1).foreach { case (k, x) => pn.put(k, x) }
+    wrap(LogJson, "commitInfo", ci)
+  }
+
+  /** The in-commit timestamp (the inCommitTimestamp writer feature) of a
+    * commit following version `prev` on a table with `configuration`:
+    * None unless the configuration enables it. An enabled table's every
+    * commit carries a MONOTONIC inCommitTimestamp that timestamp time
+    * travel prefers over commitInfo.timestamp/file mtimes — clock skew
+    * and log-file copies cannot reorder history. It lands above the
+    * previous commit's time ([[commitTime]]), so the enablement commit
+    * also never precedes its predecessor's timestamp. */
+  private def inCommitTimestamp(configuration: Map[String, String], now: Long,
+      prev: Option[Long]): Option[Long] =
+    if (!configuration.get("delta.enableInCommitTimestamps").contains("true"))
+      None
+    else Some(math.max(now, prev.map(commitTimeOf).getOrElse(0L) + 1))
+
+  /** One `protocol` action line: the reader/writer versions plus the
+    * explicit feature lists, written sorted (None omits a list). */
+  private def protocolAction(minReader: Int, minWriter: Int,
+      readerFeatures: Option[Iterable[String]] = None,
+      writerFeatures: Option[Iterable[String]] = None): String = {
+    val proto = LogJson.createObjectNode
+    proto.put("minReaderVersion", minReader).put("minWriterVersion", minWriter)
+    Seq("readerFeatures" -> readerFeatures, "writerFeatures" -> writerFeatures)
+      .foreach { case (k, fs) =>
+        fs.foreach { f =>
+          val arr = proto.putArray(k)
+          f.toSeq.sorted.foreach(arr.add)
+        }
+      }
+    wrap(LogJson, "protocol", proto)
+  }
+
+  /** One `remove` action line. The removed file's deletion-vector
+    * descriptor rides along (the protocol's shape: [[changes]] reads
+    * the removed rows as they logically were), and so does its row-id
+    * lineage when given. */
+  private def removeAction(path: String, now: Long, dataChange: Boolean,
+      dv: Option[String], baseRowId: Option[Long] = None,
+      defaultRowCommitVersion: Option[Long] = None): String = {
+    val rm = LogJson.createObjectNode
+    rm.put("path", encodePath(path)).put("deletionTimestamp", now)
+      .put("dataChange", dataChange)
+    dv.foreach(j => rm.set[ObjectNode]("deletionVector", LogJson.readTree(j)))
+    baseRowId.foreach(b => rm.put("baseRowId", b))
+    defaultRowCommitVersion.foreach(c => rm.put("defaultRowCommitVersion", c))
+    wrap(LogJson, "remove", rm)
   }
 
   private def wrap(mapper: ObjectMapper, key: String, node: ObjectNode): String = {
@@ -3008,14 +2953,106 @@ final case class DeltaTable(root: String) {
     val tombstones = (prevTombstones ++ st.tail.tombstones)
       .filter { case (p, ts) => ts >= horizon && !liveTail(p) }
 
+    // the control actions both forms carry: protocol, metaData (with the
+    // configuration and the metadata-bearing schemaString), txn
+    // water-marks, and live domainMetadata — which persists in
+    // checkpoints per the protocol, the replay floor after log cleanup,
+    // so a foreign table's domains (clustering state, row-id high-water
+    // marks) survive engine maintenance
+    val control: Seq[(String, Row)] =
+      Seq("protocol" -> Row(st.minReader, st.minWriter,
+          if (st.readerFeatures.isEmpty) null else st.readerFeatures.toSeq.sorted,
+          if (st.writerFeatures.isEmpty) null else st.writerFeatures.toSeq.sorted),
+        "metaData" -> Row(tableId, Row("parquet"), st.schema.json,
+          st.partitionColumns, st.configuration, now)) ++
+      st.txns.toSeq.sortBy(_._1).map { case (app, tv) =>
+        "txn" -> Row(app, tv, 0L) } ++
+      st.domains.toSeq.sortBy(_._1).map { case (dm, cfg) =>
+        "domainMetadata" -> Row(dm, cfg, false) }
+    val removes: Seq[(String, Row)] = tombstones.toSeq.sortBy(_._1).map {
+      case (p, ts) => "remove" -> Row(encodePath(p), ts, true) }
+
     // NOTE a checkpoint write needs no memo invalidation: a checkpoint is
     // DERIVED state (the snapshot is unchanged, so memoized LogStates
     // stay semantically correct), and a same-version file-set REPLACEMENT
     // (different part count, regenerated sidecars) deletes the old files,
     // which the memo's per-hit existence probe already catches.
-    if (st.readerFeatures.contains("v2Checkpoint"))
-      checkpointV2(spark, st, tableId, now, tombstones, parts)
-    else checkpointClassic(spark, st, tableId, now, tombstones, parts)
+    val token = java.util.UUID.randomUUID.toString.take(8)
+    val (kept, size, pointerParts) =
+      if (st.readerFeatures.contains("v2Checkpoint"))
+        checkpointV2(spark, st, token, now, control, removes, parts)
+      else checkpointClassic(spark, st, token, control ++ removes, parts)
+    // Idempotence means REPLACEMENT, in crash-safe order: the form moved
+    // its NEW files in first; only now does _last_checkpoint move, and
+    // only THEN do stale same-version files not in the new set go.
+    // Every instant of that window holds at least one COMPLETE
+    // checkpoint at this version — a foreign reader trusting the
+    // pointer never finds it dangling (delete-first had a crash window
+    // with _last_checkpoint aimed at nothing). A brief overlap of two
+    // complete sets is harmless: both describe the same snapshot, and
+    // the stale one is removed here or by the next checkpoint call.
+    val lc = LogJson.createObjectNode
+    lc.put("version", st.version).put("size", size)
+    pointerParts.foreach(n => lc.put("parts", n))
+    val tmp = logDir.resolve(s".tmp-lc-$token")
+    Files.write(tmp, (LogJson.writeValueAsString(lc) + "\n").getBytes("UTF-8"))
+    Files.move(tmp, logDir.resolve("_last_checkpoint"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val vPrefix = f"${st.version}%020d.checkpoint"
+    Files.list(logDir).iterator.asScala
+      .filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith(vPrefix) && n.endsWith(".parquet") && !kept(n)
+      }.toSeq.foreach(Files.deleteIfExists(_))
+    // then V2 sidecars referenced by NO remaining manifest
+    orphanSidecars(spark).foreach(Files.deleteIfExists(_))
+    st.version
+  }
+
+  /** Rows of checkpoint file `schema`, one per (action column, action
+    * struct) pair, every other action column null. */
+  private def actionRows(spark: SparkSession, schema: StructType,
+      actions: Seq[(String, Row)]): DataFrame =
+    spark.createDataFrame(actions.map { case (name, action) =>
+      Row.fromSeq(schema.fieldNames.toSeq.map(n =>
+        if (n == name) action else null)) }.asJava, schema)
+
+  /** The add census as rows of checkpoint file `schema` — the
+    * protocol's `add` struct (paths re-encoded, DV descriptors
+    * re-structured), every other action column null — fed from the
+    * distributed census scan. */
+  private def censusRows(spark: SparkSession, st: LogState,
+      schema: StructType): DataFrame = {
+    val add = struct(sqlEncodePath(col("path")).as("path"),
+      col("partitionValues"), col("size"), col("modificationTime"),
+      lit(true).as("dataChange"), col("stats"), col("tags"),
+      from_json(col("dv"), dvStructType).as("deletionVector"),
+      col("baseRowId"), col("defaultRowCommitVersion"))
+    fileCensus(spark, st).select(schema.map(f =>
+      (if (f.name == "add") add else lit(null)).cast(f.dataType).as(f.name)): _*)
+  }
+
+  /** The checkpoint write both forms share: `frame` lands through a
+    * `.tmp-cp-<token>`-class scratch directory ([[viaScratch]]) as one
+    * coalesced file, or as `parts` files written by `parts` tasks, and
+    * `place` moves the written files into the log. Returns place's
+    * result and the row count, OBSERVED on the write itself (one job,
+    * not a second census computation). */
+  private def writeCheckpointFiles[T](frame: DataFrame, parts: Int,
+      scratch: Path)(place: Seq[Path] => T): (T, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val observed = frame.observe(obs,
+      org.apache.spark.sql.functions.count(lit(1)).as("rows"))
+    val placed = viaScratch(scratch)(
+      (if (parts <= 1) observed.coalesce(1) else observed.repartition(parts))
+        .write.mode("overwrite").parquet(_)) { dir =>
+      val written = Files.list(dir).iterator.asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+        .sortBy(_.toString)
+      require(written.nonEmpty, "checkpoint write produced no part")
+      place(written)
+    }
+    (placed, obs.get("rows").asInstanceOf[Long])
   }
 
   /** Retained `remove` tombstones of one checkpoint file set (classic
@@ -3036,112 +3073,32 @@ final case class DeltaTable(root: String) {
       }
     }
 
-  /** The add census as the protocol's `add` struct (paths re-encoded,
-    * DV descriptors re-structured) — the payload rows both checkpoint
-    * forms write, fed from the distributed census scan. */
-  private def checkpointAddStruct: Column =
-    struct(sqlEncodePath(col("path")).as("path"), col("partitionValues"),
-      col("size"), col("modificationTime"), lit(true).as("dataChange"),
-      col("stats"), col("tags"),
-      from_json(col("dv"), dvStructType).as("deletionVector"),
-      col("baseRowId"), col("defaultRowCommitVersion")).as("add")
-
+  /** The classic form: control rows, tombstones and the add census in
+    * ONE file set. parts > 1: the protocol's MULTI-PART checkpoint
+    * (%020d.checkpoint.%010d.%010d.parquet) — at 10^7 add actions a
+    * single writer task is the bottleneck; N tasks write N parts in
+    * parallel and readers union them. Part COUNT follows the files
+    * Spark actually produced (empty partitions write nothing), so the
+    * name always declares exactly the parts that exist — the
+    * all-parts-present completeness check stays sound. A same-name
+    * single-file move is REPLACE_EXISTING. Returns (the new file names,
+    * row count, part count for `_last_checkpoint` when multi-part). */
   private def checkpointClassic(spark: SparkSession, st: LogState,
-      tableId: String, now: Long, tombstones: Map[String, Long],
-      parts: Int): Long = {
-    def ctrlRow(proto: Row = null, meta: Row = null, txn: Row = null,
-        rm: Row = null, dom: Row = null): Row =
-      Row(proto, meta, null, txn, rm, dom)
-    val protoRow = Row(st.minReader, st.minWriter,
-      if (st.readerFeatures.isEmpty) null else st.readerFeatures.toSeq.sorted,
-      if (st.writerFeatures.isEmpty) null else st.writerFeatures.toSeq.sorted)
-    val ctrl: Seq[Row] =
-      ctrlRow(proto = protoRow) +:
-      ctrlRow(meta = Row(tableId, Row("parquet"), st.schema.json,
-        st.partitionColumns, st.configuration, now)) +:
-      (st.txns.toSeq.sortBy(_._1).map { case (app, tv) =>
-        ctrlRow(txn = Row(app, tv, 0L))
-      } ++ tombstones.toSeq.sortBy(_._1).map { case (p, ts) =>
-        ctrlRow(rm = Row(encodePath(p), ts, true))
-      } ++ st.domains.toSeq.sortBy(_._1).map { case (dm, cfg) =>
-        // live domainMetadata persists in checkpoints, per the protocol —
-        // the replay floor after log cleanup, so a foreign table's
-        // domains (clustering state, row-id high-water marks) survive
-        // engine maintenance
-        ctrlRow(dom = Row(dm, cfg, false))
-      })
-    val ctrlDF = spark.createDataFrame(ctrl.asJava, checkpointSchema)
-
-    val addDF = fileCensus(spark, st).select(
-      lit(null).cast(checkpointSchema("protocol").dataType).as("protocol"),
-      lit(null).cast(checkpointSchema("metaData").dataType).as("metaData"),
-      checkpointAddStruct,
-      lit(null).cast(checkpointSchema("txn").dataType).as("txn"),
-      lit(null).cast(checkpointSchema("remove").dataType).as("remove"),
-      lit(null).cast(checkpointSchema("domainMetadata").dataType)
-        .as("domainMetadata"))
-    val full = ctrlDF.unionByName(
-      addDF.select(checkpointSchema.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*))
-
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val scratch = Paths.get(root, s".tmp-cp-$token")
-    // parts > 1: the protocol's MULTI-PART checkpoint
-    // (%020d.checkpoint.%010d.%010d.parquet) — at 10^7 add actions a
-    // single writer task is the bottleneck; N tasks write N parts in
-    // parallel and readers union them. Part COUNT follows the files
-    // Spark actually produced (empty partitions write nothing), so the
-    // name always declares exactly the parts that exist — the
-    // all-parts-present completeness check stays sound.
-    // _last_checkpoint's row count is OBSERVED on the write itself (one
-    // job, not a second census computation)
-    val obs = org.apache.spark.sql.Observation()
-    val observed = full.observe(obs,
-      org.apache.spark.sql.functions.count(lit(1)).as("rows"))
-    (if (parts <= 1) observed.coalesce(1) else observed.repartition(parts))
-      .write.mode("overwrite").parquet(scratch.toString)
-    val written = Files.list(scratch).iterator.asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-    require(written.nonEmpty, "checkpoint write produced no part")
-    // Idempotence means REPLACEMENT, in crash-safe order: move the NEW
-    // parts in first (a different part count means different names; a
-    // same-name single-file move is REPLACE_EXISTING), update
-    // _last_checkpoint, and only THEN delete stale files not in the new
-    // set. Every instant of that window holds at least one COMPLETE
-    // checkpoint at this version — a foreign reader trusting the
-    // pointer never finds it dangling (delete-first had a crash window
-    // with _last_checkpoint aimed at nothing). A brief overlap of two
-    // complete sets is harmless: both describe the same snapshot, and
-    // the stale one is removed here or by the next checkpoint call.
-    val vPrefix = f"${st.version}%020d.checkpoint"
-    val newNames: Set[String] =
-      if (parts <= 1 || written.size == 1)
-        Set(checkpointPath(st.version).getFileName.toString)
-      else written.indices.map(i => checkpointPartPath(
-        st.version, i + 1, written.size).getFileName.toString).toSet
-    if (parts <= 1 || written.size == 1)
-      Files.move(written.head, checkpointPath(st.version),
-        StandardCopyOption.REPLACE_EXISTING)
-    else written.zipWithIndex.foreach { case (p, i) =>
-      Files.move(p, checkpointPartPath(st.version, i + 1, written.size),
-        StandardCopyOption.REPLACE_EXISTING)
+      token: String, actions: Seq[(String, Row)],
+      parts: Int): (Set[String], Long, Option[Int]) = {
+    val full = actionRows(spark, checkpointSchema, actions)
+      .unionByName(censusRows(spark, st, checkpointSchema))
+    val (names, size) = writeCheckpointFiles(full, parts,
+        Paths.get(root, s".tmp-cp-$token")) { written =>
+      val targets =
+        if (written.size == 1) Seq(checkpointPath(st.version))
+        else written.indices.map(i =>
+          checkpointPartPath(st.version, i + 1, written.size))
+      written.zip(targets).foreach { case (p, t) =>
+        Files.move(p, t, StandardCopyOption.REPLACE_EXISTING) }
+      targets.map(_.getFileName.toString)
     }
-    deleteRecursively(scratch)
-    val size = obs.get("rows").asInstanceOf[Long]
-    val mapper = new ObjectMapper
-    val lc = mapper.createObjectNode
-    lc.put("version", st.version).put("size", size)
-    if (parts > 1 && written.size > 1) lc.put("parts", written.size)
-    val tmp = logDir.resolve(s".tmp-lc-$token")
-    Files.write(tmp, (mapper.writeValueAsString(lc) + "\n").getBytes("UTF-8"))
-    Files.move(tmp, logDir.resolve("_last_checkpoint"),
-      StandardCopyOption.REPLACE_EXISTING)
-    Files.list(logDir).iterator.asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith(vPrefix) && n.endsWith(".parquet") && !newNames(n)
-      }.toSeq.foreach(Files.deleteIfExists(_))
-    st.version
+    (names.toSet, size, Some(names.size).filter(_ > 1))
   }
 
   /** The V2 checkpoint form (the `v2Checkpoint` table feature): the add
@@ -3152,95 +3109,38 @@ final case class DeltaTable(root: String) {
     * (protocol, metaData with configuration, txn water-marks), one
     * `sidecar` action per sidecar file, and the `checkpointMetadata`
     * action the feature requires. Same crash-safe replacement order as
-    * the classic form: sidecars in first, then the manifest (a fresh
-    * UUID — never overwrites), then `_last_checkpoint`, then stale
-    * same-version manifests delete and orphaned sidecars (referenced by
-    * NO remaining manifest) are swept. */
-  private def checkpointV2(spark: SparkSession, st: LogState,
-      tableId: String, now: Long, tombstones: Map[String, Long],
-      parts: Int): Long = {
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val scratch = Paths.get(root, s".tmp-cp-$token")
+    * the classic form ([[checkpoint]]): sidecars in first, then the
+    * manifest (a fresh UUID — never overwrites), then
+    * `_last_checkpoint`, then stale same-version manifests delete and
+    * orphaned sidecars (referenced by NO remaining manifest) are swept. */
+  private def checkpointV2(spark: SparkSession, st: LogState, token: String,
+      now: Long, control: Seq[(String, Row)], removes: Seq[(String, Row)],
+      parts: Int): (Set[String], Long, Option[Int]) = {
     val sidecarDir = logDir.resolve("_sidecars")
     Files.createDirectories(sidecarDir)
-
-    val addDF = fileCensus(spark, st).select(
-      checkpointAddStruct,
-      lit(null).cast(sidecarSchema("remove").dataType).as("remove"))
-    val rmDF = spark.createDataFrame(
-      tombstones.toSeq.sortBy(_._1).map { case (p, ts) =>
-        Row(null, Row(encodePath(p), ts, true)) }.asJava, sidecarSchema)
-    val full = addDF.select(sidecarSchema.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)): _*).unionByName(rmDF)
-    val obs = org.apache.spark.sql.Observation()
-    val observed = full.observe(obs,
-      org.apache.spark.sql.functions.count(lit(1)).as("rows"))
-    (if (parts <= 1) observed.coalesce(1) else observed.repartition(parts))
-      .write.mode("overwrite").parquet(scratch.toString)
-    val written = Files.list(scratch).iterator.asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      .sortBy(_.toString)
-    require(written.nonEmpty, "v2 checkpoint write produced no sidecar")
-    val sidecars = written.zipWithIndex.map { case (p, i) =>
-      val name = f"$token-$i%05d-${java.util.UUID.randomUUID}.parquet"
-      val dest = sidecarDir.resolve(name)
-      Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-      (name, Files.size(dest))
+    val (sidecars, sidecarRows) = writeCheckpointFiles(
+        censusRows(spark, st, sidecarSchema)
+          .unionByName(actionRows(spark, sidecarSchema, removes)),
+        parts, Paths.get(root, s".tmp-cp-$token")) { written =>
+      written.zipWithIndex.map { case (p, i) =>
+        val name = f"$token-$i%05d-${java.util.UUID.randomUUID}.parquet"
+        val dest = sidecarDir.resolve(name)
+        Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
+        (name, Files.size(dest))
+      }
     }
-    deleteRecursively(scratch)
-
-    // manifest: control rows + sidecar actions + checkpointMetadata
-    def mRow(proto: Row = null, meta: Row = null, txn: Row = null,
-        sc: Row = null, cm: Row = null, dom: Row = null): Row =
-      Row(proto, meta, txn, sc, cm, dom)
-    val protoRow = Row(st.minReader, st.minWriter,
-      if (st.readerFeatures.isEmpty) null else st.readerFeatures.toSeq.sorted,
-      if (st.writerFeatures.isEmpty) null else st.writerFeatures.toSeq.sorted)
-    val rows: Seq[Row] =
-      mRow(proto = protoRow) +:
-      mRow(meta = Row(tableId, Row("parquet"), st.schema.json,
-        st.partitionColumns, st.configuration, now)) +:
-      mRow(cm = Row(st.version)) +:
-      (st.txns.toSeq.sortBy(_._1).map { case (app, tv) =>
-        mRow(txn = Row(app, tv, 0L))
-      } ++ sidecars.map { case (name, size) =>
-        mRow(sc = Row(name, size, now))
-      } ++ st.domains.toSeq.sortBy(_._1).map { case (dm, cfg) =>
-        mRow(dom = Row(dm, cfg, false))
-      })
-    val scratch2 = Paths.get(root, s".tmp-cpm-$token")
-    spark.createDataFrame(rows.asJava, v2ManifestSchema).coalesce(1)
-      .write.mode("overwrite").parquet(scratch2.toString)
-    val mfPart = Files.list(scratch2).iterator.asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
+    // manifest: control rows + checkpointMetadata + sidecar actions
+    val manifest = control ++ Seq("checkpointMetadata" -> Row(st.version)) ++
+      sidecars.map { case (name, size) => "sidecar" -> Row(name, size, now) }
     val manifestName =
       f"${st.version}%020d.checkpoint.${java.util.UUID.randomUUID}.parquet"
-    Files.move(mfPart, logDir.resolve(manifestName),
-      StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(scratch2)
-
-    val size = obs.get("rows").asInstanceOf[Long] + rows.size
-    val mapper = new ObjectMapper
-    val lc = mapper.createObjectNode
-    lc.put("version", st.version).put("size", size)
-    val tmp = logDir.resolve(s".tmp-lc-$token")
-    Files.write(tmp, (mapper.writeValueAsString(lc) + "\n").getBytes("UTF-8"))
-    Files.move(tmp, logDir.resolve("_last_checkpoint"),
-      StandardCopyOption.REPLACE_EXISTING)
-    // replacement sweep: stale same-version manifests (classic or V2
-    // names) go, then sidecars referenced by NO remaining manifest
-    val vPrefix = f"${st.version}%020d.checkpoint"
-    Files.list(logDir).iterator.asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith(vPrefix) && n.endsWith(".parquet") && n != manifestName
-      }.toSeq.foreach(Files.deleteIfExists(_))
-    val referenced = referencedSidecars(spark)
-    Files.list(sidecarDir).iterator.asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-        !referenced(p.getFileName.toString))
-      .toSeq.foreach(Files.deleteIfExists(_))
-    st.version
+    val (_, manifestRows) = writeCheckpointFiles(
+        actionRows(spark, v2ManifestSchema, manifest), 1,
+        Paths.get(root, s".tmp-cpm-$token")) { written =>
+      Files.move(written.head, logDir.resolve(manifestName),
+        StandardCopyOption.ATOMIC_MOVE)
+    }
+    (Set(manifestName), sidecarRows + manifestRows, None)
   }
 
   /** File-pruned DELETE of rows with `column` in [lo, hi] — the Delta
@@ -3446,43 +3346,40 @@ final case class DeltaTable(root: String) {
       }
     }
     // V2 sidecars: reference-counted against every REMAINING manifest
-    // (the same [[referencedSidecars]] rule checkpoint()'s replacement
+    // (the same [[orphanSidecars]] rule checkpoint()'s replacement
     // sweep applies) + the age gate
-    val sidecarDir = logDir.resolve("_sidecars")
-    if (Files.isDirectory(sidecarDir)) {
-      val referenced = referencedSidecars(spark)
-      Files.list(sidecarDir).iterator.asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-          !referenced(p.getFileName.toString) &&
-          Files.getLastModifiedTime(p).toMillis <= horizon)
-        .toSeq.foreach { p => Files.delete(p); deleted += 1 }
-    }
+    orphanSidecars(spark)
+      .filter(p => Files.getLastModifiedTime(p).toMillis <= horizon)
+      .foreach { p => Files.delete(p); deleted += 1 }
     deleted
   }
 
-  /** Sidecar file names a V2 manifest declares (empty for manifests
+  /** Sidecar files a V2 manifest declares (empty for manifests
     * without a sidecar column). */
   private def sidecarsOf(spark: SparkSession, manifest: Path): Seq[Path] = {
-    val df = spark.read.parquet(manifest.toString)
+    val df = parquetCached(spark, Seq(manifest))
     if (!df.schema.fieldNames.contains("sidecar")) Nil
     else df.where(col("sidecar.path").isNotNull)
       .select(col("sidecar.path")).collect()
       .map(r => logDir.resolve("_sidecars").resolve(r.getString(0))).toSeq
   }
 
-  /** Sidecar file names referenced by ANY remaining V2 manifest — the
-    * shared reference count both [[checkpoint]]'s replacement sweep and
-    * [[cleanupExpiredLogs]] filter deletions by (one copy, so the two
-    * sweeps can never drift apart on what "referenced" means). */
-  private def referencedSidecars(spark: SparkSession): Set[String] = {
-    val v2Re = """^(\d{20})\.checkpoint\.([^.]+)\.parquet$""".r
-    Files.list(logDir).iterator.asScala
-      .filter(p => p.getFileName.toString match {
-        case v2Re(_, uid) => !uid.forall(_.isDigit)
-        case _ => false
-      }).toSeq
-      .flatMap(mf => sidecarsOf(spark, mf).map(_.getFileName.toString))
-      .toSet
+  /** Sidecar files referenced by NO remaining V2 manifest — the one
+    * reference count both [[checkpoint]]'s replacement sweep and
+    * [[cleanupExpiredLogs]] delete by (one copy, so the two sweeps can
+    * never drift apart on what "referenced" means). A log without a
+    * `_sidecars` directory has none, and no manifest is read. */
+  private def orphanSidecars(spark: SparkSession): Seq[Path] = {
+    val sidecarDir = logDir.resolve("_sidecars")
+    if (!Files.isDirectory(sidecarDir)) Nil
+    else {
+      val referenced = listCheckpoints().filter(_.v2)
+        .flatMap(c => sidecarsOf(spark, c.parts.head))
+        .map(_.getFileName.toString).toSet
+      Files.list(sidecarDir).iterator.asScala.toSeq
+        .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+          !referenced(p.getFileName.toString))
+    }
   }
 
   /** UPDATE by key-range predicate, Delta's UPDATE command: rows with
@@ -3678,28 +3575,14 @@ final case class DeltaTable(root: String) {
       s".tmp-${java.util.UUID.randomUUID.toString.take(8)}")
     val w = Files.newBufferedWriter(tmp)
     try {
-      val ci = mapper.createObjectNode
-      ci.put("timestamp", now).put("operation", "CLONE")
       // an ICT-enabled source's configuration rides into the clone, so
       // the clone's v0 must carry an inCommitTimestamp too — every
       // commit of an enabled table does, per the protocol
-      if (st.configuration.get("delta.enableInCommitTimestamps")
-          .contains("true"))
-        ci.put("inCommitTimestamp", now)
-      ci.putObject("operationParameters").put("source", absRoot)
-      w.write(wrap(mapper, "commitInfo", ci)); w.newLine()
-      val proto = mapper.createObjectNode
-      proto.put("minReaderVersion", st.minReader)
-        .put("minWriterVersion", st.minWriter)
-      if (st.minReader >= 3) {
-        val rfArr = proto.putArray("readerFeatures")
-        st.readerFeatures.toSeq.sorted.foreach(rfArr.add)
-      }
-      if (st.minWriter >= 7) {
-        val wfArr = proto.putArray("writerFeatures")
-        st.writerFeatures.toSeq.sorted.foreach(wfArr.add)
-      }
-      w.write(wrap(mapper, "protocol", proto)); w.newLine()
+      w.write(commitInfoAction("CLONE", Map("source" -> absRoot), now,
+        inCommitTimestamp(st.configuration, now, None))); w.newLine()
+      w.write(protocolAction(st.minReader, st.minWriter,
+        Some(st.readerFeatures).filter(_ => st.minReader >= 3),
+        Some(st.writerFeatures).filter(_ => st.minWriter >= 7))); w.newLine()
       w.write(wrap(mapper, "metaData", metaNode(mapper, st.schema,
         st.partitionColumns, now, st.configuration,
         Some(java.util.UUID.randomUUID.toString)))); w.newLine()
@@ -3820,22 +3703,14 @@ final case class DeltaTable(root: String) {
     val mapper = new ObjectMapper
     val now = System.currentTimeMillis
     val actions = mutable.ArrayBuffer.empty[String]
-    val ci = mapper.createObjectNode
-    ci.put("timestamp", now).put("operation", "RESTORE")
-    ci.putObject("operationParameters").put("version", version.toString)
-    actions += wrap(mapper, "commitInfo", ci)
+    actions += commitInfoAction("RESTORE", Map("version" -> version.toString),
+      now, None)
     if (needMeta)
       actions += wrap(mapper, "metaData",
         metaNode(mapper, tgt.schema, tgt.partitionColumns, now,
           tgt.configuration, tgt.tableId.orElse(cur.tableId)))
-    removed.foreach { p =>
-      val rm = mapper.createObjectNode
-      rm.put("path", encodePath(p)).put("deletionTimestamp", now)
-        .put("dataChange", true)
-      removedDvs.get(p).foreach(j => rm.set[ObjectNode]("deletionVector",
-        mapper.readTree(j).asInstanceOf[ObjectNode]))
-      actions += wrap(mapper, "remove", rm)
-    }
+    removed.foreach(p =>
+      actions += removeAction(p, now, dataChange = true, removedDvs.get(p)))
     reAddOnly.foreach { f =>
       val add = mapper.createObjectNode
       add.put("path", encodePath(f.path))
@@ -3859,9 +3734,10 @@ final case class DeltaTable(root: String) {
   }
 
   /** OPTIMIZE ZORDER BY — rewrite the live file set along the Morton
-    * curve of `(dimA, dimB)` ([[ZOrder.withZValue]]) in a
-    * `dataChange=false` commit with fresh per-file stats on BOTH dims:
-    * each output file owns one contiguous curve segment, i.e. a bounded
+    * curve of `(dimA, dimB)` ([[ZOrder.withZValueN]]) in a
+    * `dataChange=false` commit with fresh per-file stats on BOTH dims
+    * ([[optimizeRewrite]] with the [[zBatch]] layout): each output file
+    * owns one contiguous curve segment, i.e. a bounded
     * RECTANGLE of (A, B) space in its stats envelope, so [[readWhere]]
     * prunes selective filters on EITHER dimension (a plain range sort
     * prunes only its one column). Snapshot is bit-identical — CDC
@@ -3870,77 +3746,80 @@ final case class DeltaTable(root: String) {
   def optimizeZOrder(dimA: String, dimB: String, bits: Int = 12,
       numFiles: Int = 8): Long = {
     val spark = SparkSession.active
-    val st = logState(spark, None)
-    require(st.partitionColumns.isEmpty,
-      s"DeltaTable $root: z-order within Hive partitions not supported — " +
-        "compact per partition instead")
-    val (stP, matCols) = preserveCols(spark, st)
-    val files = livePathDvs(spark, stP)
-    val zordered = ZOrder.withZValue(
-        matCols match {
-          case Seq(i, vv) => toMaterialized(readFilesDvPreserve(spark, stP,
-            liveAddsLineage(spark, stP), i, vv), i, vv)
-          case _ => readFilesDv(spark, stP.schema, stP.partitionColumns,
-            files, stP.columnMappingMode)
-        },
-        dimA, dimB, bits)
-      .repartitionByRange(numFiles, col("zvalue"))
-      .sortWithinPartitions("zvalue")
-      .drop("zvalue")
-    commit(zordered, Nil, files.map(_._1), "OPTIMIZE",
-      Map("zOrderBy" -> s"""["$dimA","$dimB"]"""), dataChange = false,
-      statsFor = Seq(dimA, dimB),
-      tags = Map(ZCubeTag -> java.util.UUID.randomUUID.toString),
-      removeDvs = files.collect { case (p, Some(d), _) => p -> d }.toMap,
-      materializedCols = matCols)
+    optimizeRewrite(zOrderable(logState(spark, None))) { st =>
+      Some(zBatch(liveAddsLineage(spark, st), Seq(dimA, dimB), bits,
+        numFiles, "zOrderBy", incremental = false))
+    }.get
   }
 
   /** ONE size-capped OPTIMIZE ZORDER step — the public incremental
     * clustering design (Delta's ZCube scheme): files that have never
     * been z-ordered carry no `ZCUBE_ID` tag; each call takes a
-    * byte/file-capped batch of untagged files, rewrites THEM along the
-    * (dimA, dimB) Morton curve in a `dataChange=false` commit whose
+    * byte/file-capped batch of untagged files ([[untaggedBatch]]),
+    * rewrites THEM along the (dimA, dimB) Morton curve through
+    * [[optimizeRewrite]] in a `dataChange=false` commit whose
     * adds are tagged with a fresh zcube id, and returns the version —
     * or None when CONVERGED (every live file is tagged). The untagged
     * count strictly decreases per commit, so repeated maintenance runs
     * converge over a 100 TB table without any single rewrite-the-world
     * commit; each zcube's files own curve rectangles, so both-dim
-    * pruning grows with coverage. Candidate selection is pushed down:
-    * the census filters `tags[ZCUBE_ID] IS NULL` before collecting. */
+    * pruning grows with coverage. */
   def optimizeZOrderIncremental(dimA: String, dimB: String, bits: Int = 12,
       maxBatchBytes: Long = 1L << 30, maxBatchFiles: Int = Int.MaxValue,
       targetFileBytes: Long = 128L << 20): Option[Long] = {
     val spark = SparkSession.active
-    val st = logState(spark, None)
+    optimizeRewrite(zOrderable(logState(spark, None))) { st =>
+      untaggedBatch(spark, st, maxBatchBytes, maxBatchFiles, targetFileBytes)
+        .map { case (files, numFiles) =>
+          zBatch(files, Seq(dimA, dimB), bits, numFiles, "zOrderBy",
+            incremental = true)
+        }
+    }
+  }
+
+  /** The z-order verbs' precondition: the curve spans the whole table,
+    * so Hive-partitioned tables refuse. */
+  private def zOrderable(st: LogState): LogState = {
     require(st.partitionColumns.isEmpty,
       s"DeltaTable $root: z-order within Hive partitions not supported — " +
         "compact per partition instead")
-    val (stP, matCols) = preserveCols(spark, st)
-    val untagged = collectAdds(fileCensus(spark, stP)
+    st
+  }
+
+  /** A Morton-curve OPTIMIZE batch along `dims` — the layout the
+    * z-order and reclustering verbs share: [[ZOrder.withZValueN]], a
+    * range exchange into `numFiles` curve segments, each sorted along
+    * the curve; fresh stats on every dim; the adds open a new zcube.
+    * `paramKey` (`zOrderBy` / `clusterBy`) records the dims. */
+  private def zBatch(files: Seq[AddFile], dims: Seq[String], bits: Int,
+      numFiles: Int, paramKey: String, incremental: Boolean): OptimizeBatch =
+    OptimizeBatch(files,
+      Map(paramKey -> dims.mkString("[\"", "\",\"", "\"]")) ++
+        (if (incremental) incrementalParams(files) else Map.empty),
+      df => ZOrder.withZValueN(df, dims, bits)
+        .repartitionByRange(numFiles, col("zvalue"))
+        .sortWithinPartitions("zvalue")
+        .drop("zvalue"),
+      statsFor = dims, zCube = true)
+
+  /** The incremental z-cube batch: a byte/file-capped prefix of the
+    * never-z-ordered (untagged) files, with the output file count that
+    * keeps files near `targetFileBytes` — None when every live file is
+    * tagged. Candidate selection is pushed down: the census filters
+    * `tags[ZCUBE_ID] IS NULL` before collecting. */
+  private def untaggedBatch(spark: SparkSession, st: LogState,
+      maxBatchBytes: Long, maxBatchFiles: Int,
+      targetFileBytes: Long): Option[(Seq[AddFile], Int)] = {
+    val untagged = collectAdds(fileCensus(spark, st)
       .where(col("tags").isNull || col("tags").getItem(ZCubeTag).isNull))
-    if (untagged.isEmpty) return None
-    val capped = takeCapped(untagged.sortBy(_.path), minFiles = 1,
-      maxBatchBytes, math.max(1, maxBatchFiles))
-    val batchBytes = capped.map(_.size).sum
-    val numFiles = math.max(1L,
-      (batchBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val zordered = ZOrder.withZValue(
-        matCols match {
-          case Seq(i, vv) => toMaterialized(
-            readFilesDvPreserve(spark, stP, capped, i, vv), i, vv)
-          case _ => readFilesDv(spark, stP.schema, Nil, dvPairs(capped),
-            stP.columnMappingMode)
-        }, dimA, dimB, bits)
-      .repartitionByRange(numFiles, col("zvalue"))
-      .sortWithinPartitions("zvalue")
-      .drop("zvalue")
-    Some(commit(zordered, Nil, capped.map(_.path), "OPTIMIZE",
-      Map("zOrderBy" -> s"""["$dimA","$dimB"]""",
-        "batchFiles" -> capped.size.toString, "incremental" -> "true"),
-      dataChange = false, statsFor = Seq(dimA, dimB),
-      tags = Map(ZCubeTag -> java.util.UUID.randomUUID.toString),
-      removeDvs = dvMapOf(capped),
-      materializedCols = matCols))
+    if (untagged.isEmpty) None
+    else {
+      val capped = takeCapped(untagged.sortBy(_.path), minFiles = 1,
+        maxBatchBytes, math.max(1, maxBatchFiles))
+      val batchBytes = capped.map(_.size).sum
+      Some(capped -> math.max(1L,
+        (batchBytes + targetFileBytes - 1) / targetFileBytes).toInt)
+    }
   }
 
   /** Resolve the `delta.clustering` domain's declared column paths to
@@ -3971,8 +3850,9 @@ final case class DeltaTable(root: String) {
   /** OPTIMIZE for a table declaring the `clustering` writer feature
     * (delta-spark CLUSTER BY tables — r18): rewrite the live file set
     * along the Morton curve of the DOMAIN'S OWN declared clustering
-    * columns ([[ZOrder.withZValueN]]; one column degenerates to a plain
-    * range layout at full resolution) in a `dataChange=false` commit
+    * columns ([[zBatch]] over [[ZOrder.withZValueN]]; one column
+    * degenerates to a plain range layout at full resolution) through
+    * [[optimizeRewrite]] — a `dataChange=false` commit
     * with fresh per-file stats on every clustering column — each output
     * file owns a bounded curve cell, so selective filters on ANY
     * declared column prune. This is the ONE OPTIMIZE shape the
@@ -3985,71 +3865,40 @@ final case class DeltaTable(root: String) {
     * 100 TB target use [[optimizeClusteredIncremental]]. */
   def optimizeClustered(bits: Int = 12, numFiles: Int = 8): Long = {
     val spark = SparkSession.active
-    val st = logState(spark, None)
-    require(st.partitionColumns.isEmpty,
-      s"DeltaTable $root: clustering over Hive partitions not supported")
-    val dims = resolveClusteringCols(st)
-    val (stP, matCols) = preserveCols(spark, st)
-    val files = livePathDvs(spark, stP)
-    val frame = matCols match {
-      case Seq(i, vv) => toMaterialized(readFilesDvPreserve(spark, stP,
-        liveAddsLineage(spark, stP), i, vv), i, vv)
-      case _ => readFilesDv(spark, stP.schema, stP.partitionColumns,
-        files, stP.columnMappingMode)
-    }
-    val clustered = ZOrder.withZValueN(frame, dims, bits)
-      .repartitionByRange(numFiles, col("zvalue"))
-      .sortWithinPartitions("zvalue")
-      .drop("zvalue")
-    commit(clustered, Nil, files.map(_._1), "OPTIMIZE",
-      Map("clusterBy" -> dims.mkString("[\"", "\",\"", "\"]")),
-      dataChange = false, statsFor = dims,
-      tags = Map(ZCubeTag -> java.util.UUID.randomUUID.toString),
-      removeDvs = files.collect { case (p, Some(d), _) => p -> d }.toMap,
-      materializedCols = matCols, reclusterOk = true)
+    val (st, dims) = clustering(logState(spark, None))
+    optimizeRewrite(st, reclusterOk = true) { stP =>
+      Some(zBatch(liveAddsLineage(spark, stP), dims, bits, numFiles,
+        "clusterBy", incremental = false))
+    }.get
   }
 
   /** ONE size-capped reclustering step for a clustered table — the
     * [[optimizeZOrderIncremental]] ZCube discipline pointed at the
     * domain's declared columns: each call rewrites a byte/file-capped
-    * batch of never-clustered (untagged) files along the declared
-    * curve, tags the adds with a fresh zcube id, and returns None when
-    * every live file is tagged. Repeated maintenance runs converge over
-    * a 100 TB clustered table without a rewrite-the-world commit. */
+    * batch of never-clustered (untagged) files ([[untaggedBatch]])
+    * along the declared curve, tags the adds with a fresh zcube id, and
+    * returns None when every live file is tagged. Repeated maintenance
+    * runs converge over a 100 TB clustered table without a
+    * rewrite-the-world commit. */
   def optimizeClusteredIncremental(bits: Int = 12,
       maxBatchBytes: Long = 1L << 30, maxBatchFiles: Int = Int.MaxValue,
       targetFileBytes: Long = 128L << 20): Option[Long] = {
     val spark = SparkSession.active
-    val st = logState(spark, None)
+    val (st, dims) = clustering(logState(spark, None))
+    optimizeRewrite(st, reclusterOk = true) { stP =>
+      untaggedBatch(spark, stP, maxBatchBytes, maxBatchFiles, targetFileBytes)
+        .map { case (files, numFiles) =>
+          zBatch(files, dims, bits, numFiles, "clusterBy", incremental = true)
+        }
+    }
+  }
+
+  /** The reclustering verbs' precondition and curve: an unpartitioned
+    * table and its declared clustering columns. */
+  private def clustering(st: LogState): (LogState, Seq[String]) = {
     require(st.partitionColumns.isEmpty,
       s"DeltaTable $root: clustering over Hive partitions not supported")
-    val dims = resolveClusteringCols(st)
-    val (stP, matCols) = preserveCols(spark, st)
-    val untagged = collectAdds(fileCensus(spark, stP)
-      .where(col("tags").isNull || col("tags").getItem(ZCubeTag).isNull))
-    if (untagged.isEmpty) return None
-    val capped = takeCapped(untagged.sortBy(_.path), minFiles = 1,
-      maxBatchBytes, math.max(1, maxBatchFiles))
-    val batchBytes = capped.map(_.size).sum
-    val numFiles = math.max(1L,
-      (batchBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val frame = matCols match {
-      case Seq(i, vv) => toMaterialized(
-        readFilesDvPreserve(spark, stP, capped, i, vv), i, vv)
-      case _ => readFilesDv(spark, stP.schema, Nil, dvPairs(capped),
-        stP.columnMappingMode)
-    }
-    val clustered = ZOrder.withZValueN(frame, dims, bits)
-      .repartitionByRange(numFiles, col("zvalue"))
-      .sortWithinPartitions("zvalue")
-      .drop("zvalue")
-    Some(commit(clustered, Nil, capped.map(_.path), "OPTIMIZE",
-      Map("clusterBy" -> dims.mkString("[\"", "\",\"", "\"]"),
-        "batchFiles" -> capped.size.toString, "incremental" -> "true"),
-      dataChange = false, statsFor = dims,
-      tags = Map(ZCubeTag -> java.util.UUID.randomUUID.toString),
-      removeDvs = dvMapOf(capped),
-      materializedCols = matCols, reclusterOk = true))
+    (st, resolveClusteringCols(st))
   }
 
   /** File-pruned MERGE (upsert by key) — the Delta MERGE INTO cost
@@ -4232,74 +4081,19 @@ final case class DeltaTable(root: String) {
     * overwrite reports the outgoing snapshot as deletes). Actions with
     * `dataChange=false` (compaction rewrites) are SKIPPED, per the
     * protocol — an OPTIMIZE between two versions contributes nothing to
-    * the feed. The plan reads ONLY the changed files, so incremental
+    * the feed. The per-commit walk (and its foreign-`cdc` precedence)
+    * is [[changeFeed]]'s, shared with [[changesRows]]. The plan reads
+    * ONLY the changed files, so incremental
     * consumers process deltas, never the table. */
-  def changes(spark: SparkSession, fromVersion: Long, toVersion: Long): DataFrame = {
-    require(fromVersion <= toVersion,
-      s"DeltaTable $root: changes($fromVersion, $toVersion) reversed")
-    val latest = latestVersion.getOrElse(throw new IllegalStateException(
-      s"DeltaTable $root: no _delta_log commits"))
-    require(toVersion <= latest,
-      s"DeltaTable $root: changes to v$toVersion > latest $latest")
-    val mapper = new ObjectMapper
-    val stateCache = mutable.HashMap.empty[Long, LogState]
-    def stateOf(v: Long) =
-      stateCache.getOrElseUpdate(v, logState(spark, Some(v)))
-    val slices = ((fromVersion + 1) to toVersion).flatMap { v =>
-      val adds =
-        mutable.ArrayBuffer.empty[(String, Option[String], Map[String, String])]
-      val removes =
-        mutable.ArrayBuffer.empty[(String, Option[String], Map[String, String])]
-      val cdcs = mutable.ArrayBuffer.empty[(String, Map[String, String])]
-      def dvOf(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
-        if (n.hasNonNull("deletionVector"))
-          Some(mapper.writeValueAsString(n.get("deletionVector")))
-        else None
-      Files.readAllLines(commitPath(v)).asScala.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        val add = node.get("add")
-        if (add != null && add.hasNonNull("path") &&
-            (!add.has("dataChange") || add.get("dataChange").asBoolean))
-          adds += ((decodePath(add.get("path").asText), dvOf(add),
-            mapOf(add, "partitionValues")))
-        val rm = node.get("remove")
-        if (rm != null && rm.hasNonNull("path") &&
-            (!rm.has("dataChange") || rm.get("dataChange").asBoolean))
-          removes += ((decodePath(rm.get("path").asText), dvOf(rm),
-            mapOf(rm, "partitionValues")))
-        val cdc = node.get("cdc")
-        if (cdc != null && cdc.hasNonNull("path"))
-          cdcs += decodePath(cdc.get("path").asText) -> mapOf(cdc, "partitionValues")
-      }
-      val st = stateOf(v)
-      // FOREIGN CDC: when a commit carries `cdc` actions, its
-      // `_change_data` files ARE the change set per the protocol — the
-      // add/remove file-image derivation is superseded for that commit
-      // (delta-spark writes update_preimage/postimage rows there that a
-      // file diff could never recover row-level)
-      if (cdcs.nonEmpty)
-        Seq(readCdcFiles(spark, st, cdcs.toSeq)
-          .withColumn("_commit_version", lit(v)))
-      else {
-        // both slices apply the action's own DV: the insert slice reads
-        // the add's LIVE rows, and a remove carrying its old DV reads the
-        // rows as they logically were before this commit
-        def slice(files: Seq[(String, Option[String], Map[String, String])],
-            kind: String) =
-          if (files.isEmpty) None
-          else Some(readFilesDv(spark, st.schema, st.partitionColumns, files,
-              st.columnMappingMode)
-            .withColumn("_change_type", lit(kind))
-            .withColumn("_commit_version", lit(v)))
-        slice(adds.toSeq, "insert").toSeq ++ slice(removes.toSeq, "delete")
+  def changes(spark: SparkSession, fromVersion: Long, toVersion: Long): DataFrame =
+    changeFeed(spark, "changes", fromVersion, toVersion) { (st, adds, removes) =>
+      // both slices apply the action's own DV: the insert slice reads
+      // the add's LIVE rows, and a remove carrying its old DV reads the
+      // rows as they logically were before this commit
+      Seq(adds -> "insert", removes -> "delete").collect {
+        case (files, kind) if files.nonEmpty => feedSlice(spark, st, files, kind)
       }
     }
-    slices.reduceOption(_ unionByName _).getOrElse {
-      val schema = stateOf(toVersion).schema
-        .add("_change_type", StringType).add("_commit_version", LongType)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    }
-  }
 
   /** ROW-LEVEL change feed over `(fromVersion, toVersion]` — the Change
     * Data Feed surface for this writer's commit shapes. [[changes]] is
@@ -4312,96 +4106,103 @@ final case class DeltaTable(root: String) {
     * consumers one row. Plain adds emit their LIVE rows (descriptor
     * applied) as `insert`; plain removes emit the rows that were live
     * at remove time as `delete`; `dataChange=false` maintenance is
-    * silent as ever. Exact for every shape this writer produces;
+    * silent as ever — the same [[changeFeed]] walk as [[changes]], with
+    * only the DV diff specific to this form. Exact for every shape this
+    * writer produces;
     * rewrites (the non-DV forms) remain file-granular by nature. The
     * per-commit DV decode is O(cardinality) on the driver — the
     * quantity being changed, never the table. */
   def changesRows(spark: SparkSession, fromVersion: Long,
       toVersion: Long): DataFrame = {
-    require(fromVersion <= toVersion,
-      s"DeltaTable $root: changesRows($fromVersion, $toVersion) reversed")
-    val latest = latestVersion.getOrElse(throw new IllegalStateException(
-      s"DeltaTable $root: no _delta_log commits"))
-    require(toVersion <= latest,
-      s"DeltaTable $root: changesRows to v$toVersion > latest $latest")
-    val mapper = new ObjectMapper
-    val stateCache = mutable.HashMap.empty[Long, LogState]
-    def stateOf(v: Long) =
-      stateCache.getOrElseUpdate(v, logState(spark, Some(v)))
     def rowsOf(dv: Option[String]): Set[Long] = dv.map(j =>
       DeletionVectors.read(root, DeletionVectors.fromJson(j)).toSet)
       .getOrElse(Set.empty)
+    changeFeed(spark, "changesRows", fromVersion, toVersion) {
+      (st, addList, removeList) =>
+        // last action per path wins, in first-seen order
+        def byPath(fs: Seq[FeedFile]) = mutable.LinkedHashMap.empty[String,
+          (Option[String], Map[String, String])] ++=
+          fs.map { case (p, dv, pv) => p -> (dv, pv) }
+        val adds = byPath(addList)
+        val removes = byPath(removeList)
+        val both = adds.keySet.toSet intersect removes.keySet.toSet
+        def pure(m: mutable.LinkedHashMap[String,
+            (Option[String], Map[String, String])]): Seq[FeedFile] =
+          m.toSeq.collect { case (p, (dv, pv)) if !both(p) => (p, dv, pv) }
+        val full = Seq(pure(adds) -> "insert", pure(removes) -> "delete")
+          .collect { case (files, kind) if files.nonEmpty =>
+            feedSlice(spark, st, files, kind) }
+        val diffs = both.toSeq.sorted.flatMap { p =>
+          val oldRows = rowsOf(removes(p)._1)
+          val newRows = rowsOf(adds(p)._1)
+          Seq((newRows -- oldRows) -> "delete", (oldRows -- newRows) -> "insert")
+            .collect { case (rows, kind) if rows.nonEmpty =>
+              readRowsAt(spark, st.schema, st.partitionColumns, p,
+                rows.toArray.sorted, st.columnMappingMode, adds(p)._2)
+                .withColumn("_change_type", lit(kind))
+            }
+        }
+        full ++ diffs
+    }
+  }
+
+  /** A change-feed file: (path, deletion-vector descriptor, partitionValues). */
+  private type FeedFile = (String, Option[String], Map[String, String])
+
+  /** The change-feed walk [[changes]] and [[changesRows]] share: range
+    * checks, then per commit in `(fromVersion, toVersion]` its
+    * data-changing adds and removes (in log order) and its `cdc`
+    * actions. FOREIGN CDC: when a commit carries `cdc` actions, its
+    * `_change_data` files ARE the change set per the protocol — the
+    * add/remove derivation is superseded for that commit (delta-spark
+    * writes update_preimage/postimage rows there that a file diff could
+    * never recover row-level) — otherwise `derive` turns the commit's
+    * adds and removes into `_change_type`-tagged frames. Every slice
+    * gets `_commit_version`; an empty range serves the target
+    * version's schema. */
+  private def changeFeed(spark: SparkSession, verb: String,
+      fromVersion: Long, toVersion: Long)(
+      derive: (LogState, Seq[FeedFile], Seq[FeedFile]) => Seq[DataFrame])
+      : DataFrame = {
+    require(fromVersion <= toVersion,
+      s"DeltaTable $root: $verb($fromVersion, $toVersion) reversed")
+    val latest = latestVersion.getOrElse(throw new IllegalStateException(
+      s"DeltaTable $root: no _delta_log commits"))
+    require(toVersion <= latest,
+      s"DeltaTable $root: $verb to v$toVersion > latest $latest")
+    def feedFile(n: JsonNode): FeedFile =
+      (decodePath(n.get("path").asText), dvOf(n), mapOf(n, "partitionValues"))
     val slices = ((fromVersion + 1) to toVersion).flatMap { v =>
-      val adds = mutable.LinkedHashMap
-        .empty[String, (Option[String], Map[String, String])]
-      val removes = mutable.LinkedHashMap
-        .empty[String, (Option[String], Map[String, String])]
+      val adds = mutable.ArrayBuffer.empty[FeedFile]
+      val removes = mutable.ArrayBuffer.empty[FeedFile]
       val cdcs = mutable.ArrayBuffer.empty[(String, Map[String, String])]
-      def dvOf(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
-        if (n.hasNonNull("deletionVector"))
-          Some(mapper.writeValueAsString(n.get("deletionVector")))
-        else None
-      Files.readAllLines(commitPath(v)).asScala.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        val add = node.get("add")
-        if (add != null && add.hasNonNull("path") &&
-            (!add.has("dataChange") || add.get("dataChange").asBoolean))
-          adds(decodePath(add.get("path").asText)) =
-            (dvOf(add), mapOf(add, "partitionValues"))
-        val rm = node.get("remove")
-        if (rm != null && rm.hasNonNull("path") &&
-            (!rm.has("dataChange") || rm.get("dataChange").asBoolean))
-          removes(decodePath(rm.get("path").asText)) =
-            (dvOf(rm), mapOf(rm, "partitionValues"))
+      commitActions(v).foreach { node =>
+        Option(node.get("add")).filter(dataChanging)
+          .foreach(n => adds += feedFile(n))
+        Option(node.get("remove")).filter(dataChanging)
+          .foreach(n => removes += feedFile(n))
         val cdc = node.get("cdc")
         if (cdc != null && cdc.hasNonNull("path"))
           cdcs += decodePath(cdc.get("path").asText) -> mapOf(cdc, "partitionValues")
       }
-      val st = stateOf(v)
-      // foreign CDC supersedes the derivation — the _change_data files
-      // already ARE row-level (see [[readCdcFiles]])
-      if (cdcs.nonEmpty)
-        Seq(readCdcFiles(spark, st, cdcs.toSeq)
-          .withColumn("_commit_version", lit(v)))
-      else {
-        val both = adds.keySet.toSet intersect removes.keySet.toSet
-        def tag(df: DataFrame, kind: String) = df
-          .withColumn("_change_type", lit(kind))
-          .withColumn("_commit_version", lit(v))
-        def triples(m: mutable.LinkedHashMap[String,
-            (Option[String], Map[String, String])])
-            : Seq[(String, Option[String], Map[String, String])] =
-          m.toSeq.collect { case (p, (dv, pv)) if !both(p) => (p, dv, pv) }
-        val pureAdds = triples(adds)
-        val pureRemoves = triples(removes)
-        val full =
-          (if (pureAdds.isEmpty) Nil
-           else Seq(tag(readFilesDv(spark, st.schema, st.partitionColumns,
-             pureAdds, st.columnMappingMode), "insert"))) ++
-          (if (pureRemoves.isEmpty) Nil
-           else Seq(tag(readFilesDv(spark, st.schema, st.partitionColumns,
-             pureRemoves, st.columnMappingMode), "delete")))
-        val diffs = both.toSeq.sorted.flatMap { p =>
-          val oldRows = rowsOf(removes(p)._1)
-          val newRows = rowsOf(adds(p)._1)
-          val deleted = (newRows -- oldRows).toArray.sorted
-          val resurrected = (oldRows -- newRows).toArray.sorted
-          (if (deleted.isEmpty) Nil
-           else Seq(tag(readRowsAt(spark, st.schema, st.partitionColumns,
-             p, deleted, st.columnMappingMode, adds(p)._2), "delete"))) ++
-          (if (resurrected.isEmpty) Nil
-           else Seq(tag(readRowsAt(spark, st.schema, st.partitionColumns,
-             p, resurrected, st.columnMappingMode, adds(p)._2), "insert")))
-        }
-        full ++ diffs
-      }
+      val st = logState(spark, Some(v))
+      (if (cdcs.nonEmpty) Seq(readCdcFiles(spark, st, cdcs.toSeq))
+       else derive(st, adds.toSeq, removes.toSeq))
+        .map(_.withColumn("_commit_version", lit(v)))
     }
     slices.reduceOption(_ unionByName _).getOrElse {
-      val schema = stateOf(toVersion).schema
+      val schema = logState(spark, Some(toVersion)).schema
         .add("_change_type", StringType).add("_commit_version", LongType)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
   }
+
+  /** One change-feed slice: `files` read with their own DVs applied,
+    * tagged `_change_type` = `kind`. */
+  private def feedSlice(spark: SparkSession, st: LogState,
+      files: Seq[FeedFile], kind: String): DataFrame =
+    readFilesDv(spark, st.schema, st.partitionColumns, files,
+      st.columnMappingMode).withColumn("_change_type", lit(kind))
 
   /** Read a commit's `_change_data` files (the protocol's `cdc` action
     * payload): table data columns plus the STORED `_change_type`
@@ -4448,12 +4249,6 @@ final case class DeltaTable(root: String) {
       partitionValues: Map[String, String] = Map.empty): DataFrame = {
     if (rows.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    def phys(n: String): String = {
-      val f = schema(n)
-      if (f.metadata.contains(DeltaTable.PhysNameKey))
-        f.metadata.getString(DeltaTable.PhysNameKey)
-      else n
-    }
     val raw = scanFiles(spark, schema, partitionColumns, mode,
       Seq((relPath, partitionValues)), withMeta = true)
     val wanted = spark.createDataFrame(
@@ -4462,7 +4257,7 @@ final case class DeltaTable(root: String) {
     raw
       .join(broadcast(wanted), col("_g_ri") === col("_dv_row"), "left_semi")
       .select(schema.map(f =>
-        col(phys(f.name)).cast(f.dataType).as(f.name, f.metadata)): _*)
+        col(physName(schema, f.name)).cast(f.dataType).as(f.name, f.metadata)): _*)
   }
 
   /** Delete data files referenced by NONE of the newest `keepVersions`
@@ -4470,13 +4265,17 @@ final case class DeltaTable(root: String) {
     * the protocol's tombstone-retention VACUUM contract). The age
     * horizon is the concurrency guard: a racing in-flight commit's
     * just-moved files are younger than any sane retention, so vacuum
-    * cannot eat a commit that hasn't published yet; `.tmp-*` scratch
-    * directories (in-flight writes, checkpoint staging) are skipped
-    * outright. Commits stay (the log is small and
+    * cannot eat a commit that hasn't published yet. Root-level `.tmp-*`
+    * scratch directories (the [[viaScratch]] staging of commits and
+    * checkpoints) are deleted whole once EVERY entry in them is older
+    * than [[DeltaTable.DefaultRetentionMs]] — whatever `retentionMs`
+    * says: a caller's retention covers committed history, not another
+    * writer's in-flight staging, which only a writer killed mid-stage
+    * leaves that old. Commits stay (the log is small and
     * checkpoint-compacted); reading a vacuumed-out old version fails at
     * scan time on the missing file, never returns partial data
     * silently. Live sets are paths-only collects. Returns files
-    * deleted. */
+    * deleted (parquet files of reclaimed scratch included). */
   def vacuum(keepVersions: Int = 1,
       retentionMs: Long = DefaultRetentionMs): Int = {
     require(keepVersions >= 1, s"vacuum keepVersions $keepVersions < 1")
@@ -4498,7 +4297,8 @@ final case class DeltaTable(root: String) {
       DeletionVectors.fileFor(root, DeletionVectors.fromJson(j))
         .map(_.getFileName.toString)
     }.toSet
-    val horizon = System.currentTimeMillis - retentionMs
+    val now = System.currentTimeMillis
+    val horizon = now - retentionMs
     val rootPath = Paths.get(root)
     var deleted = 0
     def walk(dir: Path): Unit =
@@ -4511,7 +4311,9 @@ final case class DeltaTable(root: String) {
           // (CDF over vacuumed history is unreadable anyway, so keeping
           // them forever would only accumulate a dead feed)
           if (name == "_change_data") walkCdc(p)
-          else if (name != "_delta_log" && !name.startsWith(".tmp-")) walk(p)
+          else if (name.startsWith(".tmp-")) {
+            if (dir == rootPath) reclaimStaging(p)
+          } else if (name != "_delta_log") walk(p)
         } else if (name.endsWith(".parquet") &&
             !live.contains(rootPath.relativize(p).toString.replace('\\', '/')) &&
             Files.getLastModifiedTime(p).toMillis <= horizon) {
@@ -4522,6 +4324,22 @@ final case class DeltaTable(root: String) {
           Files.delete(p); deleted += 1
         }
       }
+    // the directory's own mtime counts too: a young, still-empty
+    // scratch is a writer that has only just begun; entries vanishing
+    // mid-walk are a live writer finishing, never stale staging
+    def reclaimStaging(dir: Path): Unit = {
+      val stale =
+        try Files.walk(dir).iterator.asScala.forall(e =>
+          Files.getLastModifiedTime(e).toMillis <= now - DefaultRetentionMs)
+        catch {
+          case _: java.io.IOException | _: java.io.UncheckedIOException => false
+        }
+      if (stale) {
+        deleted += Files.walk(dir).iterator.asScala.count(e =>
+          Files.isRegularFile(e) && e.getFileName.toString.endsWith(".parquet"))
+        deleteRecursively(dir)
+      }
+    }
     def walkCdc(dir: Path): Unit =
       Files.list(dir).iterator.asScala.toSeq.foreach { p =>
         val name = p.getFileName.toString
@@ -4535,6 +4353,18 @@ final case class DeltaTable(root: String) {
     deleted
   }
 
+  /** The staging step every file writer here shares (commit data and
+    * CDC parts, checkpoint parts, V2 sidecars and manifests): `write`
+    * runs a Spark parquet write into the root-level `scratch`
+    * directory, `place` moves the written files where they belong, and
+    * the scratch is deleted after — also when the write or the move
+    * fails. A writer killed in between leaves the scratch to
+    * [[vacuum]]'s stale-staging sweep. */
+  private def viaScratch[T](scratch: Path)(write: String => Unit)(
+      place: Path => T): T =
+    try { write(scratch.toString); place(scratch) }
+    finally deleteRecursively(scratch)
+
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       Files.walk(p).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
@@ -4544,6 +4374,10 @@ final case class DeltaTable(root: String) {
 object DeltaTable {
   /** Delta's default tombstone/vacuum retention (7 days). */
   val DefaultRetentionMs: Long = 7L * 24 * 60 * 60 * 1000
+
+  /** The mapper every commit-file line is parsed with (Jackson reads
+    * are thread-safe on a configured mapper). */
+  private val LogJson = new ObjectMapper
 
   /** Features a legacy minReaderVersion implies, which a protocol
     * upgrade to table features (v3) must list explicitly. */
@@ -4660,6 +4494,14 @@ object DeltaTable {
     * nested leaf, the round-14 advisory finding). For mode `id`,
     * `parquet.field.id` metadata rides each field so Spark's parquet
     * reader resolves columns by field id instead of name. */
+  /** Physical (column-mapping) name of top-level column `n` of
+    * `schema` — its `delta.columnMapping.physicalName`, else `n`. */
+  private[lake] def physName(schema: StructType, n: String): String = {
+    val f = schema(n)
+    if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey)
+    else n
+  }
+
   private[lake] def physicalField(f: StructField, byId: Boolean): StructField = {
     val name =
       if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey)

@@ -20,17 +20,6 @@ import org.apache.spark.sql.functions._
   * reproducible across engines and the SQL oracle replays them. */
 object ZOrder {
 
-  /** Morton interleave of two pre-quantized dims in [0, 2^bits): bit i of
-    * `a` lands at position 2i, bit i of `b` at 2i+1. Disjoint bits — the
-    * OR is written as `+` so both engines stay in plain long arithmetic. */
-  def interleave(a: Column, b: Column, bits: Int): Column = {
-    require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
-    (0 until bits).map { i =>
-      shiftleft(shiftright(a.cast("long"), i).bitwiseAND(lit(1L)), 2 * i) +
-        shiftleft(shiftright(b.cast("long"), i).bitwiseAND(lit(1L)), 2 * i + 1)
-    }.reduce(_ + _)
-  }
-
   /** Quantize a long column to [0, 2^bits) rank space against broadcast
     * corpus min/max: `(x − min) · 2^bits ÷ (max − min + 1)` in exact long
     * arithmetic — `div` is Spark's IntegralDivide (the Column `/` would be
@@ -39,26 +28,6 @@ object ZOrder {
     call_function("div",
       (x.cast("long") - minCol) * (1L << bits), maxCol - minCol + 1L)
 
-  /** Append `zvalue` for integral dims `(dimA, dimB)`: one min/max stats
-    * row (map-side agg, broadcast back) + a map-side projection. */
-  def withZValue(df: DataFrame, dimA: String, dimB: String,
-      bits: Int): DataFrame = {
-    val stats = df.agg(
-      min(col(dimA).cast("long")).as("_min_a"),
-      max(col(dimA).cast("long")).as("_max_a"),
-      min(col(dimB).cast("long")).as("_min_b"),
-      max(col(dimB).cast("long")).as("_max_b"))
-    df.crossJoin(broadcast(stats))
-      .withColumn("zvalue", interleave(
-        quantize(col(dimA), col("_min_a"), col("_max_a"), bits),
-        quantize(col(dimB), col("_min_b"), col("_max_b"), bits), bits))
-      .drop("_min_a", "_max_a", "_min_b", "_max_b")
-  }
-
-  /** Write `df` z-ordered on `(dimA, dimB)`: range-partition + sort on the
-    * z-value so every file owns one contiguous curve segment (a bounded
-    * rectangle of (A, B) space in its min/max footers). The helper column
-    * is dropped before writing — pruning works off the DIMS' own footers. */
   /** Zone-map effectiveness report: partition rows into `zones`
     * equal-width bands of `layoutKey` (the stand-ins for files written in
     * that layout), collect each band's min/max of `statsCol` (the parquet
@@ -90,19 +59,23 @@ object ZOrder {
       .agg(count(lit(1)).as("n_zones"), sum(col("n_rows")).as("n_rows"))
   }
 
+  /** Write `df` z-ordered on `(dimA, dimB)`: range-partition + sort on the
+    * z-value ([[withZValueN]]) so every file owns one contiguous curve
+    * segment (a bounded rectangle of (A, B) space in its min/max
+    * footers). The helper column is dropped before writing — pruning
+    * works off the DIMS' own footers. */
   def writeZOrdered(df: DataFrame, dimA: String, dimB: String, bits: Int,
       files: Int, path: String): Unit =
-    withZValue(df, dimA, dimB, bits)
+    withZValueN(df, Seq(dimA, dimB), bits)
       .repartitionByRange(files, col("zvalue"))
       .sortWithinPartitions("zvalue")
       .drop("zvalue")
       .write.mode("overwrite").parquet(path)
 
-  // ---- N-dimensional form (liquid-clustering reclustering, r18) -----
-
   /** N-dim Morton interleave of pre-quantized dims in [0, 2^bits): bit
-    * i of dim d lands at position i·n + d. Disjoint bits, `+` as OR —
-    * the 2-dim [[interleave]] is the n = 2 case. */
+    * i of dim d lands at position i·n + d (for two dims: bit i of `a` at
+    * 2i, of `b` at 2i+1). Disjoint bits, `+` as OR, so both engines
+    * stay in plain long arithmetic. */
   def interleaveN(dims: Seq[Column], bits: Int): Column = {
     val n = dims.size
     require(n >= 2, s"interleaveN needs >= 2 dims, got $n")

@@ -93,10 +93,10 @@ object MiscRegistry {
     // -- z-order (Morton) values over two integral dims: the 2-D zone-map
     // layout key (lake.ZOrder.writeZOrdered range-partitions on it)
     "q_zorder" -> ((s, d) =>
-      graft.lake.ZOrder.withZValue(
+      graft.lake.ZOrder.withZValueN(
         Tables(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey")),
-        "l_partkey", "l_suppkey", bits = 8)),
+        Seq("l_partkey", "l_suppkey"), bits = 8)),
     // zone-map effectiveness census: 32 orderkey-band "files", footer
     // min/max of shipdate vs a 1994 range scan → pruned / full / partial
     // zone classes with row masses — the is-this-layout-worth-it report

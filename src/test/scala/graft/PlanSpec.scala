@@ -159,14 +159,17 @@ class PlanSpec extends SparkSpec {
     // the 1-row codebook is attached by broadcast; the corpus side streams
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"codebook not broadcast:\n$p")
-    // REPARTITION_BY_NUM exchanges are the Tables-level under-split-scan
-    // spread (input-layout normalization, r18), NOT an assignment shuffle:
-    // the assertion's target is the join machinery — no exchange may be
-    // INDUCED by the cell assignment itself
+    // the one exchange allowed is the Tables-level under-split-scan
+    // spread (input-layout normalization, r18): a REPARTITION_BY_NUM
+    // hash exchange on the scanned table's spread key (embeddings ->
+    // vec_id, Tables.cpuDenseKeys). The assertion's target is the join
+    // machinery — no other exchange may be INDUCED by the cell
+    // assignment, a repartition on any other column included
+    val spread = """Exchange hashpartitioning\(vec_id#\d+L?, \d+\), REPARTITION_BY_NUM""".r
     val induced = p.linesIterator.filter(l =>
       (l.contains("Exchange hashpartitioning") ||
         l.contains("Exchange rangepartitioning")) &&
-        !l.contains("REPARTITION_BY_NUM")).toSeq
+        spread.findFirstIn(l).isEmpty).toSeq
     assert(induced.isEmpty,
       s"cell assignment should not shuffle the corpus:\n$p")
     // centroids must ride in the broadcast payload, never the plan: no

@@ -841,6 +841,46 @@ class DeltaSpec extends SparkSpec {
     assert(vals(t.read(spark)) == Set((2L, "b")))
   }
 
+  test("vacuum: a dead writer's .tmp-* staging past the default retention is reclaimed; young staging survives") {
+    import spark.implicits._
+    val t = tmpTable()
+    t.overwrite(Seq((1L, "a")).toDF("k", "s"))
+    t.overwrite(Seq((2L, "b")).toDF("k", "s")) // v0's file now dead
+    val eightDaysAgo = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis - 8L * 24 * 60 * 60 * 1000)
+    def stage(dir: String, files: Seq[String], backDate: String => Boolean) = {
+      val d = Paths.get(t.root, dir)
+      files.foreach { f =>
+        val p = d.resolve(f)
+        Files.createDirectories(p.getParent)
+        Files.write(p, Array[Byte](1, 2))
+      }
+      // files first, then their directories (writing a file touches its
+      // directory's mtime)
+      (files.map(d.resolve) ++ files.flatMap(f =>
+          Option(Paths.get(f).getParent).map(d.resolve)) :+ d)
+        .filter(p => p == d || backDate(d.relativize(p).toString))
+        .foreach(Files.setLastModifiedTime(_, eightDaysAgo))
+      d
+    }
+    // a commit whose writer was killed mid-stage, 8 days ago
+    val dead = stage(".tmp-delta-dead", Seq("part-a.parquet", "k=1/part-b.parquet"),
+      _ => true)
+    // a checkpoint scratch still being written: one fresh file
+    val mixed = stage(".tmp-cp-mixed", Seq("part-old.parquet", "part-new.parquet"),
+      _ != "part-new.parquet")
+    val young = stage(".tmp-delta-young", Seq("part-inflight.parquet"), _ => false)
+    Files.setLastModifiedTime(young, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis))
+    // zero retention: the dead data file plus the two stale staged parquet
+    // files go; staging with any young entry is another writer's, kept
+    assert(t.vacuum(1, retentionMs = 0L) == 3)
+    assert(!Files.exists(dead))
+    assert(Files.exists(mixed.resolve("part-old.parquet")))
+    assert(Files.exists(young.resolve("part-inflight.parquet")))
+    assert(vals(t.read(spark)) == Set((2L, "b")))
+  }
+
   test("pruning is pushed down: the driver collects only surviving files") {
     import spark.implicits._
     val t = tmpTable()
@@ -2380,6 +2420,57 @@ class DeltaSpec extends SparkSpec {
     val vOpt = dt.latestVersion.get
     val cj = commitJson(dt, vOpt)
     assert(cj.contains("\"dataChange\":false") && cj.contains("clusterBy"))
+  }
+
+  test("OPTIMIZE history shape: every rewrite verb commits OPTIMIZE with its exact operationParameters and an empty change feed") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    var next = 0L
+    def appendSmall(dt: DeltaTable, n: Int): Unit = (0 until n).foreach { _ =>
+      dt.append(Seq((next, next % 3, s"r$next"), (next + 1, next % 5, s"q$next"))
+        .toDF("k", "j", "s").coalesce(1))
+      next += 2
+    }
+    def checkOptimize(dt: DeltaTable, v: Long, params: Map[String, String]) = {
+      val h = dt.history(spark).where(col("version") === v).collect()
+      assert(h.length == 1)
+      assert(h(0).getAs[String]("operation") == "OPTIMIZE")
+      val got = h(0).getMap[String, String](h(0).fieldIndex("operationParameters"))
+        .toMap
+      assert(got == params, s"v$v parameters")
+      assert(dt.changes(spark, v - 1, v).isEmpty, s"v$v feeds changes")
+      assert(dt.changesRows(spark, v - 1, v).isEmpty, s"v$v feeds row changes")
+    }
+    val t = tmpTable()
+    appendSmall(t, 3)
+    checkOptimize(t, t.compact(), Map.empty)
+    appendSmall(t, 2)
+    checkOptimize(t, t.compactIncremental(smallBytes = Long.MaxValue).get,
+      Map("batchFiles" -> "3", "incremental" -> "true"))
+    checkOptimize(t, t.optimizeZOrder("k", "j", numFiles = 2),
+      Map("zOrderBy" -> "[\"k\",\"j\"]"))
+    appendSmall(t, 2)
+    checkOptimize(t, t.optimizeZOrderIncremental("k", "j").get,
+      Map("zOrderBy" -> "[\"k\",\"j\"]", "batchFiles" -> "2",
+        "incremental" -> "true"))
+    assert(vals(t.read(spark)) == (0L until next).map(k =>
+      (k, if (k % 2 == 0) s"r$k" else s"q${k - 1}")).toSet)
+
+    // the clustered pair on a table declaring the delta.clustering domain
+    val c = tmpTable()
+    appendSmall(c, 3)
+    Files.write(Paths.get(c.root, "_delta_log")
+        .resolve(f"${c.latestVersion.get + 1}%020d.json"),
+      ("""{"commitInfo":{"timestamp":2,"operation":"CLUSTER BY","operationParameters":{}}}
+         |{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["appendOnly","invariants","domainMetadata","clustering"]}}
+         |{"domainMetadata":{"domain":"delta.clustering","configuration":"{\"clusteringColumns\":[[\"k\"]]}","removed":false}}
+         |""").stripMargin.getBytes("UTF-8"))
+    checkOptimize(c, c.optimizeClustered(numFiles = 1),
+      Map("clusterBy" -> "[\"k\"]"))
+    appendSmall(c, 2)
+    checkOptimize(c, c.optimizeClusteredIncremental().get,
+      Map("clusterBy" -> "[\"k\"]", "batchFiles" -> "2",
+        "incremental" -> "true"))
   }
 
   test("clustered reclustering OPTIMIZE: declared Morton layout prunes EVERY clustering column; string dims; incremental converges; refusals") {

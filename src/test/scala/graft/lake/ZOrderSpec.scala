@@ -13,7 +13,7 @@ class ZOrderSpec extends SparkSpec {
 
   test("interleave matches hand-computed Morton codes") {
     val df = Seq((3L, 0L), (0L, 3L), (5L, 6L)).toDF("a", "b")
-    val z = df.select(ZOrder.interleave(col("a"), col("b"), 4).as("z"))
+    val z = df.select(ZOrder.interleaveN(Seq(col("a"), col("b")), 4).as("z"))
       .collect().map(_.getLong(0)).toSeq
     // a=0b11,b=0 → 0b0101; a=0,b=0b11 → 0b1010
     // a=0b101,b=0b110: bits a0<<0,a1<<2,a2<<4 = 1+0+16; b0<<1,b1<<3,b2<<5 = 0+8+32

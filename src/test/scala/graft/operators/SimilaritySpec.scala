@@ -50,13 +50,16 @@ class SimilaritySpec extends SparkSpec {
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"), plan)
     val corpusSide = plan.split("Broadcast(NestedLoop|Hash)Join").last
       .split("BroadcastExchange", 2)(0)
-    // REPARTITION_BY_NUM exchanges are the Tables-level under-split-scan
-    // spread (input-layout normalization, r18), NOT operator machinery:
-    // the assertion's target is that the decontamination attach itself
-    // induces no shuffle of the train corpus
+    // the one exchange allowed is the Tables-level under-split-scan
+    // spread (input-layout normalization, r18): a REPARTITION_BY_NUM
+    // hash exchange on the scanned table's spread key (embeddings ->
+    // vec_id, Tables.cpuDenseKeys). The assertion's target is that the
+    // decontamination attach itself induces no shuffle of the train
+    // corpus, a repartition on any other column included
+    val spread = """Exchange hashpartitioning\(vec_id#\d+L?, \d+\), REPARTITION_BY_NUM""".r
     val induced = corpusSide.linesIterator.filter(l =>
       l.contains("Exchange hashpartitioning") &&
-        !l.contains("REPARTITION_BY_NUM")).toSeq
+        spread.findFirstIn(l).isEmpty).toSeq
     assert(induced.isEmpty,
       s"train corpus shuffled before the broadcast attach:\n$plan")
   }

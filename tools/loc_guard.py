@@ -16,6 +16,12 @@
    second publish site is a second commit protocol growing back (the retired
    TxTable manifest format was one).
 
+3. One commit-file reader: fail when `Files.readAllLines` appears more
+   than once in graft/lake/Delta.scala. Every parse of a `_delta_log`
+   commit file (snapshot replay, history, time travel, the change feed,
+   commit sizes) goes through the one private reader there; a second
+   read site is a second copy of the commit-JSON format growing back.
+
 Run from the repo root as part of the verify recipe.
 """
 import sys
@@ -26,6 +32,7 @@ REGISTRY = Path("src/main/scala/graft/registry")
 MAIN = Path("src/main/scala")
 PUBLISH = "Files.createLink"
 PUBLISH_HOME = MAIN / "graft/lake/Delta.scala"
+READER = "Files.readAllLines"
 
 
 def registry_violations():
@@ -59,8 +66,18 @@ def publish_violations():
     return violations
 
 
+def reader_violations():
+    n = PUBLISH_HOME.read_text(errors="replace").count(READER)
+    if n > 1:
+        print(f"FAIL: {READER} appears {n} times in {PUBLISH_HOME} — read "
+              "commit files through its one commit-file reader instead:")
+        return [PUBLISH_HOME]
+    print(f"OK: {READER} appears {n} time(s) in {PUBLISH_HOME}")
+    return []
+
+
 def main():
-    bad = registry_violations() + publish_violations()
+    bad = registry_violations() + publish_violations() + reader_violations()
     return 1 if bad else 0
 
 
