@@ -5,7 +5,6 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.zip.CRC32
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
 
 /** Deletion vectors — the Delta protocol's metadata-sized row deletes
   * (PROTOCOL.md "Deletion Vectors", reader feature `deletionVectors`,
@@ -331,15 +330,6 @@ object DeletionVectors {
       if (n.hasNonNull("offset")) Some(n.get("offset").asInt) else None,
       n.get("sizeInBytes").asInt,
       n.get("cardinality").asLong)
-  }
-
-  /** Populate `node` with the descriptor's fields (for log actions). */
-  def toNode(d: Descriptor, node: ObjectNode): Unit = {
-    node.put("storageType", d.storageType)
-    node.put("pathOrInlineDv", d.pathOrInlineDv)
-    d.offset.foreach(node.put("offset", _))
-    node.put("sizeInBytes", d.sizeInBytes)
-    node.put("cardinality", d.cardinality)
   }
 
   // ---- Z85 (ZeroMQ base-85, the protocol's DV encoding) ------------------

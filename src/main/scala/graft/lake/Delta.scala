@@ -266,7 +266,7 @@ final case class DeltaTable(root: String) {
         // to -1 would restart id blocks at 0 and reuse assigned row ids.
         if (c.trim.isEmpty) None
         else {
-          val n = scala.util.Try(new ObjectMapper().readTree(c)).toOption
+          val n = scala.util.Try(LogJson.readTree(c)).toOption
             .filter(n => n != null && n.hasNonNull("rowIdHighWaterMark"))
             .getOrElse(throw new IllegalStateException(
               s"delta.rowTracking domain carries an unparsable " +
@@ -284,7 +284,7 @@ final case class DeltaTable(root: String) {
     def clusteringColumns: Seq[String] =
       domains.get(DeltaTable.ClusteringDomain).filter(_.trim.nonEmpty)
         .map { c =>
-          val n = scala.util.Try(new ObjectMapper().readTree(c)).toOption
+          val n = scala.util.Try(LogJson.readTree(c)).toOption
             .filter(n => n != null && n.has("clusteringColumns") &&
               n.get("clusteringColumns").isArray)
             .getOrElse(throw new IllegalStateException(
@@ -750,7 +750,7 @@ final case class DeltaTable(root: String) {
     * collapse test (a DV covering every physical row becomes a plain
     * remove) for both [[delete]] and [[merge]]. */
   private def numRecordsOf(f: AddFile): Option[Long] = f.statsJson.flatMap { s =>
-    val n = new ObjectMapper().readTree(s)
+    val n = LogJson.readTree(s)
     if (n.hasNonNull("numRecords")) Some(n.get("numRecords").asLong) else None
   }
 
@@ -844,7 +844,7 @@ final case class DeltaTable(root: String) {
     * otherwise silently skip the file's delete. */
   private def buildDvs(spark: SparkSession, matchedRows: DataFrame,
       candidates: Seq[AddFile])
-      : (Seq[AddFile], Seq[(AddFile, DeletionVectors.Descriptor)]) = {
+      : (Seq[AddFile], Seq[(AddFile, String)]) = {
     val absRoot = Paths.get(root).toAbsolutePath.toString
     val byKey: Map[String, AddFile] =
       candidates.map(f => metaPath(absRoot, f.path) -> f).toMap
@@ -856,7 +856,7 @@ final case class DeltaTable(root: String) {
         "candidate; a silent miss would no-op the delete for those rows")
     val emptied = results.collect { case (fp, j, _) if j == null => byKey(fp) }.toSeq
     val descs = results.collect { case (fp, j, _) if j != null =>
-      byKey(fp) -> DeletionVectors.fromJson(j) }.toSeq
+      byKey(fp) -> j }.toSeq
     (emptied, descs)
   }
 
@@ -1769,7 +1769,7 @@ final case class DeltaTable(root: String) {
       statsFor: Seq[String] = Nil,
       tags: Map[String, String] = Map.empty,
       removeDvs: Map[String, String] = Map.empty,
-      dvReAdds: Seq[(AddFile, DeletionVectors.Descriptor)] = Nil,
+      dvReAdds: Seq[(AddFile, String)] = Nil,
       writeData: Boolean = true,
       colMapSafe: Boolean = false,
       cdcData: Option[DataFrame] = None,
@@ -2103,12 +2103,11 @@ final case class DeltaTable(root: String) {
         val aggs = fcount(flit(1)).as("_nrec") +: physStatsFor.flatMap(c =>
           Seq(fmin(fcol(c)).as(s"_min_$c"), fmax(fcol(c)).as(s"_max_$c"),
             fcount(fcol(c)).as(s"_cnt_$c")))
-        val m = new ObjectMapper
         reader.parquet(paths.toSeq: _*)
           .groupBy(input_file_name().as("_file"))
           .agg(aggs.head, aggs.tail: _*).collect()
           .map { r =>
-            val st = m.createObjectNode
+            val st = LogJson.createObjectNode
             val nrec = r.getLong(1)
             st.put("numRecords", nrec)
             val mins = st.putObject("minValues")
@@ -2130,7 +2129,7 @@ final case class DeltaTable(root: String) {
               nodeAt(nulls, parts.dropRight(1)).put(parts.last,
                 nrec - r.getLong(4 + 3 * i))
             }
-            r.getString(0).split('/').last -> m.writeValueAsString(st)
+            r.getString(0).split('/').last -> LogJson.writeValueAsString(st)
           }.toMap
       }
 
@@ -2147,13 +2146,12 @@ final case class DeltaTable(root: String) {
     val (rowIdBase: Map[String, Long], newRowIdHwm: Option[Long]) =
       if (!rowTracking || moved.isEmpty) (Map.empty[String, Long], None)
       else {
-        val m = new ObjectMapper
         var next = currentState.map(_.rowIdHighWaterMark).getOrElse(-1L) + 1
         val base = moved.map { case (path, _, _) =>
           // a footer-only (zero-row) part file produces no stats group
           // in the write-time aggregate — it owns an empty id block
           val n = statsByName.get(path.split('/').last)
-            .map(s => m.readTree(s).get("numRecords").asLong).getOrElse(0L)
+            .map(s => LogJson.readTree(s).get("numRecords").asLong).getOrElse(0L)
           val b = next; next += n; path -> b
         }.toMap
         (base, Some(next - 1))
@@ -2171,12 +2169,8 @@ final case class DeltaTable(root: String) {
         toPhysFrame(cdf, Seq("_change_type")), "cdc", Some("_change_data")))
         .getOrElse(Nil)
 
-    val mapper = new ObjectMapper
     val now = System.currentTimeMillis
     val actions = mutable.ArrayBuffer.empty[String]
-
-    actions += commitInfoAction(op, opParams, now,
-      inCommitTimestamp(newConfiguration, now, Some(v - 1).filter(_ >= 0)))
 
     // Type-gated table features (reader AND writer, per the protocol):
     // TIMESTAMP_NTZ columns require timestampNtz, VARIANT columns
@@ -2224,87 +2218,55 @@ final case class DeltaTable(root: String) {
     // id) is PRESERVED, never reset — dropping (say)
     // delta.enableChangeDataFeed on a schema-evolving append would
     // silently disable the feed for foreign readers.
-    if (emitMeta) {
-      actions += wrap(mapper, "metaData",
-        metaNode(mapper, recordedSchema, partitionBy, now,
-          newConfiguration, currentState.flatMap(_.tableId)))
-    }
+    if (emitMeta)
+      actions += metaDataAction(recordedSchema, partitionBy, now,
+        newConfiguration, currentState.flatMap(_.tableId))
     txn.foreach { case (appId, tv) =>
-      val tx = mapper.createObjectNode
+      val tx = LogJson.createObjectNode
       tx.put("appId", appId).put("version", tv).put("lastUpdated", now)
-      actions += wrap(mapper, "txn", tx)
+      actions += wrap("txn", tx)
     }
     cdcStaged.foreach { case (path, size, pv) =>
-      val c = mapper.createObjectNode
+      val c = LogJson.createObjectNode
       c.put("path", encodePath(path))
       val pvNode = c.putObject("partitionValues")
       pv.foreach { case (k, x) => pvNode.put(k, x) }
       c.put("size", size).put("dataChange", false)
-      actions += wrap(mapper, "cdc", c)
+      actions += wrap("cdc", c)
     }
     removePaths.foreach(p =>
       actions += removeAction(p, now, dataChange, removeDvs.get(p)))
     moved.foreach { case (path, size, pv) =>
-      val add = mapper.createObjectNode
-      add.put("path", encodePath(path))
-      val pvNode = add.putObject("partitionValues")
-      pv.foreach { case (k, x) => pvNode.put(k, x) }
-      add.put("size", size).put("modificationTime", now)
-        .put("dataChange", dataChange)
-      statsByName.get(path.split('/').last)
-        .foreach(s => add.put("stats", s))
-      if (tags.nonEmpty) {
-        val tg = add.putObject("tags")
-        tags.foreach { case (k, x) => tg.put(k, x) }
-      }
-      rowIdBase.get(path).foreach { b =>
-        add.put("baseRowId", b).put("defaultRowCommitVersion", v)
-      }
-      actions += wrap(mapper, "add", add)
+      val base = rowIdBase.get(path)
+      actions += addAction(AddFile(path, pv, size, now,
+        statsByName.get(path.split('/').last), tags,
+        baseRowId = base, defaultRowCommitVersion = base.map(_ => v)),
+        dataChange)
     }
     // the advanced row-id high-water mark rides the SAME commit as the
     // adds it covers, per the protocol's domain-metadata shape
-    newRowIdHwm.foreach { h =>
-      val dm = mapper.createObjectNode
-      dm.put("domain", DeltaTable.RowTrackingDomain)
-        .put("configuration", s"""{"rowIdHighWaterMark":$h}""")
-        .put("removed", false)
-      actions += wrap(mapper, "domainMetadata", dm)
-    }
+    newRowIdHwm.foreach(h => actions += domainMetadataAction(
+      DeltaTable.RowTrackingDomain, s"""{"rowIdHighWaterMark":$h}"""))
     // DV re-adds: remove the old entry (its previous descriptor riding
     // the remove, for CDC) then re-add the SAME path with the merged
-    // deletionVector — the file's bytes are untouched
-    dvReAdds.foreach { case (f, d) =>
+    // deletionVector — the file's bytes are untouched, and the same
+    // physical rows keep their row ids (what makes DV DELETE legal on an
+    // ENABLED table)
+    dvReAdds.foreach { case (f, dv) =>
       actions += removeAction(f.path, now, dataChange, f.dv, f.baseRowId,
         f.defaultRowCommitVersion)
-      val add = mapper.createObjectNode
-      add.put("path", encodePath(f.path))
-      val pvNode = add.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, x) => pvNode.put(k, x) }
-      add.put("size", f.size).put("modificationTime", f.modificationTime)
-        .put("dataChange", dataChange)
-      f.statsJson.foreach(s => add.put("stats", s))
-      if (f.tags.nonEmpty) {
-        val tn = add.putObject("tags")
-        f.tags.foreach { case (k, x) => tn.put(k, x) }
-      }
-      DeletionVectors.toNode(d, add.putObject("deletionVector"))
-      // the same physical rows keep their row ids through a DV re-add —
-      // exactly what makes DV DELETE legal on an ENABLED table
-      f.baseRowId.foreach(b => add.put("baseRowId", b))
-      f.defaultRowCommitVersion.foreach(c =>
-        add.put("defaultRowCommitVersion", c))
-      actions += wrap(mapper, "add", add)
+      actions += addAction(f.copy(dv = Some(dv)), dataChange)
     }
-    publish(v, actions.toSeq)
+    publish(v, op, opParams, newConfiguration, now, actions.iterator)
     v
   }
 
-  private def metaNode(mapper: ObjectMapper, schema: StructType,
-      partitionBy: Seq[String], now: Long,
-      configuration: Map[String, String] = Map.empty,
-      tableId: Option[String] = None): ObjectNode = {
-    val meta = mapper.createObjectNode
+  /** One `metaData` action line; the id defaults to the name-derived
+    * UUID of the table root. */
+  private def metaDataAction(schema: StructType, partitionBy: Seq[String],
+      now: Long, configuration: Map[String, String],
+      tableId: Option[String]): String = {
+    val meta = LogJson.createObjectNode
     meta.put("id", tableId.getOrElse(
       java.util.UUID.nameUUIDFromBytes(root.getBytes("UTF-8")).toString))
     val fmt = meta.putObject("format")
@@ -2315,7 +2277,7 @@ final case class DeltaTable(root: String) {
     val cfg = meta.putObject("configuration")
     configuration.toSeq.sortBy(_._1).foreach { case (k, x) => cfg.put(k, x) }
     meta.put("createdTime", now)
-    meta
+    wrap("metaData", meta)
   }
 
   /** Explicit feature lists for a protocol upgrade to (3, 7) declaring
@@ -2633,7 +2595,7 @@ final case class DeltaTable(root: String) {
     * (the delta protocol's column-invariants JSON; delta-spark writes
     * exactly this shape). */
   private def parseInvariant(json: String): String = {
-    val node = new ObjectMapper().readTree(json)
+    val node = LogJson.readTree(json)
     val e = node.path("expression").path("expression")
     require(e.isTextual,
       s"DeltaTable $root: unparseable delta.invariants metadata $json")
@@ -2672,14 +2634,9 @@ final case class DeltaTable(root: String) {
       }
     }
     val conf = st.configuration ++ props
-    val mapper = new ObjectMapper
     val now = System.currentTimeMillis
     val actions = mutable.ArrayBuffer.empty[String]
     val ictOn = conf.get("delta.enableInCommitTimestamps").contains("true")
-    // enabling in-commit timestamps makes THIS commit the first to
-    // carry one (the config is active as of this version)
-    actions += commitInfoAction("SET TBLPROPERTIES", props, now,
-      inCommitTimestamp(conf, now, Some(st.version)))
     // activation upgrades the protocol to the declaring tier, per the
     // protocol's rule: CHECK constraints → minWriter 3, CDF →
     // minWriter 4; inCommitTimestamp exists only as an EXPLICIT v7
@@ -2707,10 +2664,12 @@ final case class DeltaTable(root: String) {
     } else if (activated.nonEmpty &&
         activated.map(_._1).max > st.minWriter)
       actions += protocolAction(st.minReader, activated.map(_._1).max)
-    actions += wrap(mapper, "metaData",
-      metaNode(mapper, st.schema, st.partitionColumns, now, conf, st.tableId))
+    actions += metaDataAction(st.schema, st.partitionColumns, now, conf,
+      st.tableId)
+    // enabling in-commit timestamps makes THIS commit the first to
+    // carry one (the config is active as of this version)
     val v = st.version + 1
-    publish(v, actions.toSeq)
+    publish(v, "SET TBLPROPERTIES", props, conf, now, actions.iterator)
     v
   }
 
@@ -2819,44 +2778,12 @@ final case class DeltaTable(root: String) {
   private def metadataOnlyCommit(st: LogState, op: String,
       params: Map[String, String], newSchema: StructType,
       newPartitionColumns: Seq[String]): Long = {
-    val mapper = new ObjectMapper
     val now = System.currentTimeMillis
-    val actions = mutable.ArrayBuffer.empty[String]
-    actions += commitInfoAction(op, params, now,
-      inCommitTimestamp(st.configuration, now, Some(st.version)))
-    actions += wrap(mapper, "metaData", metaNode(mapper, newSchema,
-      newPartitionColumns, now, st.configuration, st.tableId))
     val v = st.version + 1
-    publish(v, actions.toSeq)
+    publish(v, op, params, st.configuration, now, Iterator(metaDataAction(
+      newSchema, newPartitionColumns, now, st.configuration, st.tableId)))
     v
   }
-
-  /** One `commitInfo` action line: wall-clock `timestamp`, operation,
-    * `operationParameters` (keys sorted) and, when given, the
-    * inCommitTimestamp. */
-  private def commitInfoAction(op: String, params: Map[String, String],
-      now: Long, ict: Option[Long]): String = {
-    val ci = LogJson.createObjectNode
-    ci.put("timestamp", now).put("operation", op)
-    ict.foreach(t => ci.put("inCommitTimestamp", t))
-    val pn = ci.putObject("operationParameters")
-    params.toSeq.sortBy(_._1).foreach { case (k, x) => pn.put(k, x) }
-    wrap(LogJson, "commitInfo", ci)
-  }
-
-  /** The in-commit timestamp (the inCommitTimestamp writer feature) of a
-    * commit following version `prev` on a table with `configuration`:
-    * None unless the configuration enables it. An enabled table's every
-    * commit carries a MONOTONIC inCommitTimestamp that timestamp time
-    * travel prefers over commitInfo.timestamp/file mtimes — clock skew
-    * and log-file copies cannot reorder history. It lands above the
-    * previous commit's time ([[commitTime]]), so the enablement commit
-    * also never precedes its predecessor's timestamp. */
-  private def inCommitTimestamp(configuration: Map[String, String], now: Long,
-      prev: Option[Long]): Option[Long] =
-    if (!configuration.get("delta.enableInCommitTimestamps").contains("true"))
-      None
-    else Some(math.max(now, prev.map(commitTimeOf).getOrElse(0L) + 1))
 
   /** One `protocol` action line: the reader/writer versions plus the
     * explicit feature lists, written sorted (None omits a list). */
@@ -2872,7 +2799,7 @@ final case class DeltaTable(root: String) {
           f.toSeq.sorted.foreach(arr.add)
         }
       }
-    wrap(LogJson, "protocol", proto)
+    wrap("protocol", proto)
   }
 
   /** One `remove` action line. The removed file's deletion-vector
@@ -2888,21 +2815,79 @@ final case class DeltaTable(root: String) {
     dv.foreach(j => rm.set[ObjectNode]("deletionVector", LogJson.readTree(j)))
     baseRowId.foreach(b => rm.put("baseRowId", b))
     defaultRowCommitVersion.foreach(c => rm.put("defaultRowCommitVersion", c))
-    wrap(LogJson, "remove", rm)
+    wrap("remove", rm)
   }
 
-  private def wrap(mapper: ObjectMapper, key: String, node: ObjectNode): String = {
-    val outer = mapper.createObjectNode
+  /** One `add` action line, serialising `f` as it is: path (encoded),
+    * partitionValues, size, modificationTime, `dataChange`, stats,
+    * tags, deletion-vector descriptor and row-id lineage. Every verb
+    * that adds a file builds the [[AddFile]] it means and writes it
+    * here, so no field can be dropped at one site and kept at another. */
+  private def addAction(f: AddFile, dataChange: Boolean): String = {
+    val add = LogJson.createObjectNode
+    add.put("path", encodePath(f.path))
+    val pvNode = add.putObject("partitionValues")
+    f.partitionValues.foreach { case (k, x) => pvNode.put(k, x) }
+    add.put("size", f.size).put("modificationTime", f.modificationTime)
+      .put("dataChange", dataChange)
+    f.statsJson.foreach(s => add.put("stats", s))
+    if (f.tags.nonEmpty) {
+      val tn = add.putObject("tags")
+      f.tags.foreach { case (k, x) => tn.put(k, x) }
+    }
+    f.dv.foreach(j => add.set[ObjectNode]("deletionVector", LogJson.readTree(j)))
+    f.baseRowId.foreach(b => add.put("baseRowId", b))
+    f.defaultRowCommitVersion.foreach(c => add.put("defaultRowCommitVersion", c))
+    wrap("add", add)
+  }
+
+  /** One live `domainMetadata` action line. */
+  private def domainMetadataAction(domain: String, configuration: String): String = {
+    val dm = LogJson.createObjectNode
+    dm.put("domain", domain).put("configuration", configuration)
+      .put("removed", false)
+    wrap("domainMetadata", dm)
+  }
+
+  private def wrap(key: String, node: ObjectNode): String = {
+    val outer = LogJson.createObjectNode
     outer.set[ObjectNode](key, node)
-    mapper.writeValueAsString(outer)
+    LogJson.writeValueAsString(outer)
   }
 
-  private[lake] def publish(v: Long, actions: Seq[String]): Unit = {
+  /** Publish commit `v` — the one commit envelope every verb writes
+    * through. Line one is the `commitInfo` action: wall-clock
+    * `timestamp` `now`, `op`, `params` (keys sorted) and, when
+    * `configuration` (the table's configuration as of this commit)
+    * enables in-commit timestamps, an `inCommitTimestamp` above version
+    * v-1's commit time ([[commitTimeOf]]) — monotonic, so clock skew
+    * cannot reorder history for timestamp time travel, and the commit
+    * that enables it never precedes its predecessor. Then `actions`,
+    * consumed once while the staging file is written, so a caller may
+    * stream them (the clone's census does). The `.tmp-` staging file is
+    * hard-linked to the commit path — atomic create-if-absent, so a
+    * racing writer of the same version loses loudly — and deleted
+    * whatever happens: after the link, and when writing a line or the
+    * link fails, so a failed commit leaves nothing in the log. */
+  private[lake] def publish(v: Long, op: String, params: Map[String, String],
+      configuration: Map[String, String], now: Long,
+      actions: Iterator[String]): Unit = {
+    val ci = LogJson.createObjectNode
+    ci.put("timestamp", now).put("operation", op)
+    if (configuration.get("delta.enableInCommitTimestamps").contains("true"))
+      ci.put("inCommitTimestamp",
+        math.max(now, (if (v == 0L) 0L else commitTimeOf(v - 1)) + 1))
+    val pn = ci.putObject("operationParameters")
+    params.toSeq.sortBy(_._1).foreach { case (k, x) => pn.put(k, x) }
     Files.createDirectories(logDir)
     val tmp = logDir.resolve(s".tmp-${java.util.UUID.randomUUID.toString.take(8)}")
-    Files.write(tmp, (actions.mkString("\n") + "\n").getBytes("UTF-8"))
-    try Files.createLink(commitPath(v), tmp) // atomic, fails if v exists
-    catch {
+    try {
+      val w = Files.newBufferedWriter(tmp)
+      try (Iterator(wrap("commitInfo", ci)) ++ actions).foreach { line =>
+        w.write(line); w.write('\n')
+      } finally w.close()
+      Files.createLink(commitPath(v), tmp) // atomic, fails if v exists
+    } catch {
       case e: java.nio.file.FileAlreadyExistsException =>
         throw new IllegalStateException(
           s"DeltaTable $root: concurrent commit already published v$v", e)
@@ -3267,7 +3252,7 @@ final case class DeltaTable(root: String) {
     // an already-deleted row is harmless and saves a join)
     val (emptied, descs) =
       if (partial.isEmpty)
-        (Seq.empty[AddFile], Seq.empty[(AddFile, DeletionVectors.Descriptor)])
+        (Seq.empty[AddFile], Seq.empty[(AddFile, String)])
       else buildDvs(spark,
         matchedRowsFrame(spark, st, partial, matchCond), partial)
     if (emptied.isEmpty && descs.isEmpty && contained.isEmpty)
@@ -3517,7 +3502,7 @@ final case class DeltaTable(root: String) {
     // outright
     val (emptied, descs) =
       if (partial.isEmpty)
-        (Seq.empty[AddFile], Seq.empty[(AddFile, DeletionVectors.Descriptor)])
+        (Seq.empty[AddFile], Seq.empty[(AddFile, String)])
       else buildDvs(spark,
         matchedRowsFrame(spark, st, partial, matchCond), partial)
     val wholeDrops = cand.filter(f => contained(f.path)) ++ emptied
@@ -3533,12 +3518,16 @@ final case class DeltaTable(root: String) {
   /** Shallow CLONE, the Delta CLONE command's zero-copy form: creates a
     * NEW independent table at `dstRoot` whose v0 log references THIS
     * table's live data files by ABSOLUTE path (the protocol's add.path
-    * is "a relative path or an absolute path"), carrying their stats
-    * and the source's schema/configuration/protocol with a FRESH table
-    * id — metadata only, zero bytes of data copied. The v0 census
-    * STREAMS through toLocalIterator (O(1) driver memory beyond the
-    * line buffer; the log file itself is the O(live files) floor every
-    * Delta writer shares). From v0 the clone diverges freely: appends
+    * is "a relative path or an absolute path"), carrying the source's
+    * schema/configuration/protocol with a FRESH table id — metadata
+    * only, zero bytes of data copied. Each add keeps the source file's
+    * stats, tags, DV and row ids ([[addAction]]). The v0
+    * census STREAMS through toLocalIterator into the target's
+    * [[publish]] (O(1) driver memory beyond the line buffer; the log
+    * file itself is the O(live files) floor every Delta writer shares),
+    * which also stamps the inCommitTimestamp an ICT-enabled source's
+    * configuration requires and drops its staging file if the stream
+    * fails. From v0 the clone diverges freely: appends
     * land under its root, DV deletes write bitmaps under its root
     * against the absolute files, OPTIMIZE localizes rewritten data, and
     * vacuum walks only the clone's root so SOURCE files are never swept
@@ -3568,77 +3557,42 @@ final case class DeltaTable(root: String) {
     require(dst.latestVersion.isEmpty,
       s"DeltaTable $dstRoot: shallow-clone target already has commits")
     val absRoot = Paths.get(root).toAbsolutePath.toString
-    val mapper = new ObjectMapper
     val now = System.currentTimeMillis
-    Files.createDirectories(dst.logDir)
-    val tmp = dst.logDir.resolve(
-      s".tmp-${java.util.UUID.randomUUID.toString.take(8)}")
-    val w = Files.newBufferedWriter(tmp)
-    try {
-      // an ICT-enabled source's configuration rides into the clone, so
-      // the clone's v0 must carry an inCommitTimestamp too — every
-      // commit of an enabled table does, per the protocol
-      w.write(commitInfoAction("CLONE", Map("source" -> absRoot), now,
-        inCommitTimestamp(st.configuration, now, None))); w.newLine()
-      w.write(protocolAction(st.minReader, st.minWriter,
-        Some(st.readerFeatures).filter(_ => st.minReader >= 3),
-        Some(st.writerFeatures).filter(_ => st.minWriter >= 7))); w.newLine()
-      w.write(wrap(mapper, "metaData", metaNode(mapper, st.schema,
-        st.partitionColumns, now, st.configuration,
-        Some(java.util.UUID.randomUUID.toString)))); w.newLine()
-      // the source's live domainMetadata (row-id high-water marks etc.)
-      // is table state the clone starts from, exactly like configuration
-      st.domains.toSeq.sortBy(_._1).foreach { case (dm, cfg) =>
-        val dn = mapper.createObjectNode
-        dn.put("domain", dm).put("configuration", cfg).put("removed", false)
-        w.write(wrap(mapper, "domainMetadata", dn)); w.newLine()
-      }
-      val localizedDvs = mutable.HashSet.empty[String]
-      val it = fileCensus(spark, st).toLocalIterator()
-      while (it.hasNext) {
-        val f = rowToAdd(it.next())
-        val add = mapper.createObjectNode
-        add.put("path", encodePath(dataPath(absRoot, f.path)))
-        val pvNode = add.putObject("partitionValues")
-        f.partitionValues.foreach { case (k, x) => pvNode.put(k, x) }
-        add.put("size", f.size).put("modificationTime", f.modificationTime)
-          .put("dataChange", true)
-        f.statsJson.foreach(s => add.put("stats", s))
-        f.dv.foreach { j =>
-          // localize the bitmap file under the CLONE root: the verbatim
-          // "u" descriptor then resolves against the clone (one copy per
-          // shared .bin — many adds may point into one file at distinct
-          // offsets); "i" rides the action, "p" is already absolute
-          val d = DeletionVectors.fromJson(j)
-          DeletionVectors.fileFor(root, d)
-            .filter(_ => d.storageType == "u").foreach { srcP =>
-            val dstP = DeletionVectors.fileFor(dstRoot, d).get
-            if (localizedDvs.add(dstP.toString)) {
-              Files.createDirectories(dstP.getParent)
-              Files.copy(srcP, dstP, StandardCopyOption.REPLACE_EXISTING)
-            }
+    val localizedDvs = mutable.HashSet.empty[String]
+    val adds = fileCensus(spark, st).toLocalIterator().asScala.map { r =>
+      val f = rowToAdd(r)
+      f.dv.foreach { j =>
+        // localize the bitmap file under the CLONE root: the verbatim
+        // "u" descriptor then resolves against the clone (one copy per
+        // shared .bin — many adds may point into one file at distinct
+        // offsets); "i" rides the action, "p" is already absolute
+        val d = DeletionVectors.fromJson(j)
+        DeletionVectors.fileFor(root, d)
+          .filter(_ => d.storageType == "u").foreach { srcP =>
+          val dstP = DeletionVectors.fileFor(dstRoot, d).get
+          if (localizedDvs.add(dstP.toString)) {
+            Files.createDirectories(dstP.getParent)
+            Files.copy(srcP, dstP, StandardCopyOption.REPLACE_EXISTING)
           }
-          add.set[ObjectNode]("deletionVector",
-            mapper.readTree(j).asInstanceOf[ObjectNode])
         }
-        // same physical rows in the clone: row ids carry over verbatim
-        f.baseRowId.foreach(b => add.put("baseRowId", b))
-        f.defaultRowCommitVersion.foreach(c =>
-          add.put("defaultRowCommitVersion", c))
-        w.write(wrap(mapper, "add", add)); w.newLine()
       }
-    } catch {
-      // a mid-stream failure must not leave the partially-written
-      // staging file in the target's _delta_log
-      case t: Throwable =>
-        w.close(); Files.deleteIfExists(tmp); throw t
-    } finally w.close()
-    try Files.createLink(dst.commitPath(0L), tmp)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"DeltaTable $dstRoot: concurrent commit already published v0", e)
-    } finally Files.deleteIfExists(tmp)
+      // same physical rows in the clone: stats, tags, DVs and row ids
+      // carry over verbatim; only the path becomes absolute
+      addAction(f.copy(path = dataPath(absRoot, f.path)), dataChange = true)
+    }
+    // the source's configuration (an ICT-enabled one included, so v0
+    // carries an inCommitTimestamp) and its live domainMetadata (row-id
+    // high-water marks etc.) are table state the clone starts from
+    dst.publish(0L, "CLONE", Map("source" -> absRoot), st.configuration, now,
+      Iterator(
+        protocolAction(st.minReader, st.minWriter,
+          Some(st.readerFeatures).filter(_ => st.minReader >= 3),
+          Some(st.writerFeatures).filter(_ => st.minWriter >= 7)),
+        metaDataAction(st.schema, st.partitionColumns, now, st.configuration,
+          Some(java.util.UUID.randomUUID.toString))) ++
+      st.domains.toSeq.sortBy(_._1).iterator.map { case (dm, cfg) =>
+        domainMetadataAction(dm, cfg) } ++
+      adds)
     dst
   }
 
@@ -3653,7 +3607,11 @@ final case class DeltaTable(root: String) {
     * snapshot are live by definition. History is preserved: the
     * restore is itself a commit, so time travel to the intermediate
     * versions still works, and a second restore can undo the first.
-    * Re-added files keep their stats, so data skipping survives. */
+    * Re-added files keep their stats, tags, DVs and row ids (the one
+    * [[addAction]] writes the target's [[AddFile]]), so data skipping
+    * survives and a z-ordered file stays in its zcube; like every
+    * commit, it carries an inCommitTimestamp on enabled tables
+    * ([[publish]]). */
   def restore(version: Long): Long = {
     val spark = SparkSession.active
     val tgt = logState(spark, Some(version))
@@ -3700,36 +3658,23 @@ final case class DeltaTable(root: String) {
     require(!needMeta || cur.columnMappingMode == "none",
       s"DeltaTable $root: RESTORE of a column-mapping table across a " +
         "metadata change is not supported")
-    val mapper = new ObjectMapper
     val now = System.currentTimeMillis
-    val actions = mutable.ArrayBuffer.empty[String]
-    actions += commitInfoAction("RESTORE", Map("version" -> version.toString),
-      now, None)
-    if (needMeta)
-      actions += wrap(mapper, "metaData",
-        metaNode(mapper, tgt.schema, tgt.partitionColumns, now,
-          tgt.configuration, tgt.tableId.orElse(cur.tableId)))
-    removed.foreach(p =>
-      actions += removeAction(p, now, dataChange = true, removedDvs.get(p)))
-    reAddOnly.foreach { f =>
-      val add = mapper.createObjectNode
-      add.put("path", encodePath(f.path))
-      val pvNode = add.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, x) => pvNode.put(k, x) }
-      add.put("size",
-          if (f.size > 0) f.size else Files.size(absRoot.resolve(f.path)))
-        .put("modificationTime", now).put("dataChange", true)
-      f.statsJson.foreach(s => add.put("stats", s))
-      f.dv.foreach(j => add.set[ObjectNode]("deletionVector",
-        mapper.readTree(j).asInstanceOf[ObjectNode]))
-      // restored files are the SAME physical rows: row ids ride along
-      f.baseRowId.foreach(b => add.put("baseRowId", b))
-      f.defaultRowCommitVersion.foreach(c =>
-        add.put("defaultRowCommitVersion", c))
-      actions += wrap(mapper, "add", add)
-    }
+    val meta =
+      if (!needMeta) Iterator.empty
+      else Iterator(metaDataAction(tgt.schema, tgt.partitionColumns, now,
+        tgt.configuration, tgt.tableId.orElse(cur.tableId)))
+    val removes = removed.iterator.map(p =>
+      removeAction(p, now, dataChange = true, removedDvs.get(p)))
+    // restored files are the SAME physical rows: stats, tags (a
+    // z-ordered file stays in its zcube), DVs and row ids ride along
+    val reAdds = reAddOnly.iterator.map(f => addAction(f.copy(
+      size = if (f.size > 0) f.size else Files.size(absRoot.resolve(f.path)),
+      modificationTime = now), dataChange = true))
+    // the target's configuration is the table's after this commit (it
+    // equals the current one unless the metaData action restores it)
     val v = cur.version + 1
-    publish(v, actions.toSeq)
+    publish(v, "RESTORE", Map("version" -> version.toString),
+      tgt.configuration, now, meta ++ removes ++ reAdds)
     v
   }
 
@@ -4034,7 +3979,7 @@ final case class DeltaTable(root: String) {
     val absRoot = Paths.get(root).toAbsolutePath.toString
     val (emptied, descs) =
       if (cand.isEmpty)
-        (Seq.empty[AddFile], Seq.empty[(AddFile, DeletionVectors.Descriptor)])
+        (Seq.empty[AddFile], Seq.empty[(AddFile, String)])
       else {
         val dataSchema = StructType(
           st.schema.filterNot(f => st.partitionColumns.contains(f.name))
@@ -4274,8 +4219,13 @@ final case class DeltaTable(root: String) {
     * leaves that old. Commits stay (the log is small and
     * checkpoint-compacted); reading a vacuumed-out old version fails at
     * scan time on the missing file, never returns partial data
-    * silently. Live sets are paths-only collects. Returns files
-    * deleted (parquet files of reclaimed scratch included). */
+    * silently. The live set is ONE census: a file is live in some kept
+    * version exactly when it is live in the oldest one or added by a
+    * later kept commit, so vacuum collects the oldest kept snapshot's
+    * paths (plus DV descriptors) and reads the adds of the newer kept
+    * commits from their commit files — never a census per version.
+    * Returns files deleted (parquet files of reclaimed scratch
+    * included). */
   def vacuum(keepVersions: Int = 1,
       retentionMs: Long = DefaultRetentionMs): Int = {
     require(keepVersions >= 1, s"vacuum keepVersions $keepVersions < 1")
@@ -4287,8 +4237,12 @@ final case class DeltaTable(root: String) {
     requireWriterFeatures(logState(spark, None), "VACUUM",
       removesRows = false)
     val keepFrom = math.max(0L, latest - keepVersions + 1)
-    val liveAdds = (keepFrom to latest).flatMap(v =>
-      livePathDvs(spark, logState(spark, Some(v))))
+    val liveAdds: Seq[(String, Option[String])] =
+      livePathDvs(spark, logState(spark, Some(keepFrom)))
+        .map { case (p, dv, _) => (p, dv) } ++
+      ((keepFrom + 1) to latest).flatMap(v => commitActions(v)
+        .map(_.get("add")).filter(a => a != null && a.hasNonNull("path"))
+        .map(a => (decodePath(a.get("path").asText), dvOf(a))))
     val live = liveAdds.map(_._1).toSet
     // DELETION VECTOR files referenced by any kept snapshot's adds are
     // live too; superseded DV files (a repeat delete re-wrote the merged
@@ -4375,8 +4329,8 @@ object DeltaTable {
   /** Delta's default tombstone/vacuum retention (7 days). */
   val DefaultRetentionMs: Long = 7L * 24 * 60 * 60 * 1000
 
-  /** The mapper every commit-file line is parsed with (Jackson reads
-    * are thread-safe on a configured mapper). */
+  /** The one mapper every commit-file line is parsed and written with
+    * (Jackson mappers are thread-safe once configured). */
   private val LogJson = new ObjectMapper
 
   /** Features a legacy minReaderVersion implies, which a protocol

@@ -881,6 +881,43 @@ class DeltaSpec extends SparkSpec {
     assert(vals(t.read(spark)) == Set((2L, "b")))
   }
 
+  test("vacuum keepVersions=3: files and DV bitmaps live in any kept version survive; files dead before the window go") {
+    import spark.implicits._
+    val t = tmpTable()
+    def files(v: Long): Set[String] = t.read(spark, Some(v)).inputFiles.toSet
+    def exists(uri: String): Boolean = Files.exists(Paths.get(new java.net.URI(uri)))
+    def bins: Set[String] = Files.list(Paths.get(t.root)).iterator.asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.startsWith("deletion_vector_") && n.endsWith(".bin")).toSet
+    def ks(v: Long): Set[Long] =
+      t.read(spark, Some(v)).select("k").collect().map(_.getLong(0)).toSet
+    def rows(keys: Seq[Long], tag: String) =
+      keys.map(k => (k, s"$tag$k")).toDF("k", "s").coalesce(1)
+    t.append(rows(1L to 1000L, "a"), statsFor = Seq("k"))        // v0: file A
+    t.append(rows(1501L to 1505L, "d"), statsFor = Seq("k"))     // v1: file D
+    val dead = files(1L) -- files(0L)
+    t.delete("k", 1501L, 1505L)                                  // v2: D removed
+    t.append(rows(2001L to 2010L, "w"), statsFor = Seq("k"))     // v3: file W
+    val window = files(3L) -- files(2L)
+    t.delete("k", 1L, 500L)                                      // v4: A's first bitmap
+    val middleBins = bins
+    t.delete("k", 901L, 2010L)                                   // v5: W removed, A re-bitmapped
+    assert(t.latestVersion.contains(5L))
+    assert(dead.size == 1 && window.size == 1 && middleBins.nonEmpty)
+    // keep v3..v5: W (added v3, removed v5) and v4's bitmap stay, D goes
+    t.vacuum(keepVersions = 3, retentionMs = 0L)
+    assert(!exists(dead.head), "a file dead before the kept window survived")
+    assert(exists(window.head), "a file live inside the kept window was deleted")
+    assert(middleBins.subsetOf(bins), "a kept middle version's DV bitmap was deleted")
+    assert(ks(3L) == ((1L to 1000L) ++ (2001L to 2010L)).toSet)
+    assert(ks(4L) == ((501L to 1000L) ++ (2001L to 2010L)).toSet)
+    assert(ks(5L) == (501L to 900L).toSet)
+    // the setup is not vacuous: keeping only v5 reclaims W and v4's bitmap
+    t.vacuum(keepVersions = 1, retentionMs = 0L)
+    assert(!exists(window.head) && (middleBins & bins).isEmpty)
+    assert(ks(5L) == (501L to 900L).toSet)
+  }
+
   test("pruning is pushed down: the driver collects only surviving files") {
     import spark.implicits._
     val t = tmpTable()
@@ -1262,6 +1299,34 @@ class DeltaSpec extends SparkSpec {
     intercept[IllegalArgumentException](tp.optimizeZOrder("k", "k"))
   }
 
+  test("restore and shallow clone re-add files with their tags: z-ordered files stay in their zcube") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val t = tmpTable()
+    t.overwrite((0 until 256).map(i => (i.toLong % 16, i.toLong / 16, i.toLong))
+      .toDF("a", "b", "v").repartitionByRange(4, col("b")), statsFor = Seq("a", "b"))
+    val vz = t.optimizeZOrder("a", "b", bits = 4, numFiles = 4)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    // each add action's ZCUBE_ID tag in commit v of the table at root
+    def zcubes(root: String, v: Long): Seq[Option[String]] = Files.readAllLines(
+      Paths.get(root, "_delta_log", f"$v%020d.json")).asScala.toSeq
+      .filter(_.nonEmpty).map(m.readTree).flatMap(n => Option(n.get("add")))
+      .map(a => Option(a.get("tags")).flatMap(tg =>
+        Option(tg.get(DeltaTable.ZCubeTag))).map(_.asText)).sortBy(_.toString)
+    val tagged = zcubes(t.root, vz)
+    assert(tagged.nonEmpty && tagged.forall(_.isDefined))
+    t.compact() // one untagged file replaces the zcube
+    val vr = t.restore(vz)
+    assert(zcubes(t.root, vr) == tagged, "RESTORE re-added the zcube untagged")
+    // the restored files are back in their zcube: nothing left to z-order
+    assert(t.optimizeZOrderIncremental("a", "b", bits = 4).isEmpty)
+    val dstRoot = Files.createTempDirectory("deltaclonetags").toString + "/t"
+    val dst = t.shallowCloneTo(dstRoot)
+    assert(zcubes(dstRoot, 0L) == tagged, "CLONE v0 dropped the source's tags")
+    assert(dst.optimizeZOrderIncremental("a", "b", bits = 4).isEmpty)
+    assert(dst.read(spark).count() == 256)
+  }
+
   test("concurrent commit of the same version loses loudly (atomic publish)") {
     import spark.implicits._
     val t = tmpTable()
@@ -1273,9 +1338,20 @@ class DeltaSpec extends SparkSpec {
     // v2 now; instead race the tmp-link path directly
     val e = intercept[IllegalStateException] {
       // force a publish collision at v1 via a second handle that saw v0
-      DeltaTable(t.root).publish(1L, Seq("{\"commitInfo\":{}}"))
+      DeltaTable(t.root).publish(1L, "WRITE", Map.empty, Map.empty, 0L,
+        Iterator.empty)
     }
     assert(e.getMessage.contains("concurrent commit"))
+    // a writer failing mid-stream publishes nothing and leaves no
+    // staging file in the log
+    val failing = Iterator("{\"txn\":{}}") ++ Iterator.single(())
+      .map[String](_ => throw new IllegalStateException("mid-stream"))
+    intercept[IllegalStateException] {
+      t.publish(2L, "WRITE", Map.empty, Map.empty, 0L, failing)
+    }
+    assert(t.latestVersion.contains(1L))
+    assert(!Files.list(Paths.get(t.root, "_delta_log")).iterator.asScala
+      .exists(_.getFileName.toString.startsWith(".tmp-")), "staging file left")
   }
 
   // ---- round 15: writer-feature gate, V2 checkpoints, CDC emission,
@@ -1845,6 +1921,9 @@ class DeltaSpec extends SparkSpec {
     assert(ict(0L).isEmpty) // pre-enablement commit carries none
     val Seq(i1, i2, i3) = Seq(1L, 2L, 3L).map(v => ict(v).get)
     assert(i1 < i2 && i2 < i3) // strictly monotonic by construction
+    // RESTORE commits like every other verb: its ICT lands above v3's
+    val vr = dt.restore(2L)
+    assert(ict(vr).exists(_ > i3), s"RESTORE v$vr carries no ICT above $i3")
     // the enablement commit declared the v7 feature
     val log1 = new String(Files.readAllBytes(
       Paths.get(dt.root, "_delta_log", f"${1L}%020d.json")), "UTF-8")

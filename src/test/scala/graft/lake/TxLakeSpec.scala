@@ -79,7 +79,7 @@ class TxLakeSpec extends SparkSpec {
     val t = tmpTable()
     t.overwrite(Seq((1, "a")).toDF("k", "s"))
     val e = intercept[IllegalStateException] {
-      t.publish(0L, Seq("{\"commitInfo\":{}}"))
+      t.publish(0L, "WRITE", Map.empty, Map.empty, 0L, Iterator.empty)
     }
     assert(e.getMessage.contains("concurrent commit"))
     // the loser's temp commit file is cleaned up, the winner's intact

@@ -12,9 +12,12 @@
 
 2. One commit protocol: fail when `Files.createLink` (the atomic
    create-if-absent commit publish) appears in any src/main file other than
-   graft/lake/Delta.scala. The lake keeps one table format, the Delta log; a
-   second publish site is a second commit protocol growing back (the retired
-   TxTable manifest format was one).
+   graft/lake/Delta.scala, or more than once there. The lake keeps one table
+   format, the Delta log; a second publish site is a second commit protocol
+   growing back (the retired TxTable manifest format was one), and a second
+   site inside Delta.scala is a second commit envelope whose commitInfo,
+   in-commit timestamp and staging-file cleanup can drift from the one
+   `publish` there.
 
 3. One commit-file reader: fail when `Files.readAllLines` appears more
    than once in graft/lake/Delta.scala. Every parse of a `_delta_log`
@@ -61,8 +64,13 @@ def publish_violations():
               "graft.lake.DeltaTable instead of a second commit protocol:")
         for f in violations:
             print(f"  {f}")
-    else:
-        print(f"OK: {PUBLISH} appears only in {PUBLISH_HOME}")
+    n = PUBLISH_HOME.read_text(errors="replace").count(PUBLISH)
+    if n > 1:
+        print(f"FAIL: {PUBLISH} appears {n} times in {PUBLISH_HOME} — every "
+              "commit goes through its one publish envelope instead:")
+        violations.append(PUBLISH_HOME)
+    if not violations:
+        print(f"OK: {PUBLISH} appears only in {PUBLISH_HOME}, {n} time(s)")
     return violations
 
 
